@@ -46,7 +46,7 @@ def _workloads():
         return tdigest_stats(dig, {"p50": ("quantile", 0.5), "p99": ("quantile", 0.99)})
 
     def td_global_lineitem(spark, sf_dir):
-        dig = tdigest_agg(load(spark, sf_dir, "lineitem"), "l_extendedprice", delta=200, salt=8)
+        dig = tdigest_agg(load(spark, sf_dir, "lineitem"), "l_extendedprice", delta=200)
         return tdigest_stats(
             dig, {"p50": ("quantile", 0.5), "p999": ("quantile", 0.999), "n": ("total_weight",)}
         )

@@ -19,10 +19,6 @@ _EXPORTS = {
     "TDigest": ("tdigest_spark.sketch.tdigest", "TDigest"),
     "tdigest_agg": ("tdigest_spark.operators.digest_agg", "tdigest_agg"),
     "tdigest_merge_agg": ("tdigest_spark.operators.digest_agg", "tdigest_merge_agg"),
-    "tdigest_merge_agg_sql": (
-        "tdigest_spark.operators.digest_agg",
-        "tdigest_merge_agg_sql",
-    ),
     "tdigest_stats": ("tdigest_spark.operators.digest_agg", "tdigest_stats"),
     "tdigest_cdf_at": ("tdigest_spark.operators.digest_agg", "tdigest_cdf_at"),
     "with_percentile_rank": (

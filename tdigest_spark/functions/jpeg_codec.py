@@ -404,7 +404,11 @@ class _BitReader:
         if self.n == 0:
             self._fill()
         self.n -= 1
-        return (self.acc >> self.n) & 1
+        b = (self.acc >> self.n) & 1
+        # keep only the n unread bits: an unmasked acc grows with the
+        # stream and makes every shift O(bytes read), i.e. quadratic
+        self.acc &= (1 << self.n) - 1
+        return b
 
     def bits(self, length: int) -> int:
         v = 0

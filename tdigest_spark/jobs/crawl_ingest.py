@@ -179,115 +179,119 @@ def crawl_ingest_sink(
         # decontamination, scoring, corpus write) — without the pin
         # each pass re-reads the batch input and re-runs the join
         survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-        out = survivors
-        n_survived = out.count()
-        n_contaminated = 0
-        n_quality_dropped = 0
-        mean_quality = None
-        applied = None
-        if heldout is not None and n_survived:
-            from tdigest_spark.operators.dedup import decontaminate
+        try:
+            out = survivors
+            n_survived = out.count()
+            n_contaminated = 0
+            n_quality_dropped = 0
+            mean_quality = None
+            applied = None
+            if heldout is not None and n_survived:
+                from tdigest_spark.operators.dedup import decontaminate
 
-            flagged = (
-                decontaminate(
-                    out, heldout, id_col="canon_url", text_col=text_col,
-                    heldout_id_col=heldout_id_col,
-                    threshold=decon_threshold,
-                )
-                .select(F.col("corpus_id").alias("canon_url"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            n_contaminated = flagged.count()
-            if n_contaminated:
-                out = out.join(F.broadcast(flagged), "canon_url", "left_anti")
-        if scoring:
-            from tdigest_spark.functions.quality import score_quality
-            from tdigest_spark.functions.textstats import (
-                with_curation_signals,
-                with_text_stats,
-            )
-
-            scored = score_quality(
-                with_curation_signals(with_text_stats(out, text_col), text_col),
-                weights=quality_weights,
-            )
-            added = [
-                c for c in scored.columns
-                if c not in out.columns and c != "quality_prob"
-            ]
-            scored = scored.drop(*added).localCheckpoint(eager=True)
-            applied = quality_threshold
-            if quality_quantile is not None:
-                prior = _latest_score_digest(corpus_dir, before_batch=batch_id)
-                if prior is not None and prior.total_weight > 0:
-                    adaptive = prior.quantile(quality_quantile)
-                    applied = (
-                        adaptive if applied is None else max(applied, adaptive)
+                flagged = (
+                    decontaminate(
+                        out, heldout, id_col="canon_url", text_col=text_col,
+                        heldout_id_col=heldout_id_col,
+                        threshold=decon_threshold,
                     )
-            agg = scored.agg(
-                F.count("*").alias("n"),
-                F.avg("quality_prob").alias("mq"),
-                F.sum(
-                    # NULL scores (e.g. empty/unextractable text) are
-                    # unquantifiable: any active bar rejects them, and
-                    # they are COUNTED — metrics must match the corpus
-                    F.when(
-                        F.lit(applied is not None)
-                        & (
-                            F.col("quality_prob").isNull()
-                            | (F.col("quality_prob") < F.lit(applied if applied is not None else 0.0))
-                        ),
-                        1,
-                    ).otherwise(0).cast("long")
-                ).alias("nd"),
-            ).collect()[0]
-            mean_quality = agg["mq"]
-            n_quality_dropped = int(agg["nd"] or 0)
-            if applied is not None:
-                out = scored.where(F.col("quality_prob") >= applied)
-            else:
-                out = scored
-            if quality_quantile is not None and int(agg["n"] or 0) > 0:
-                # fold THIS batch's scores into the cumulative digest
-                # (one blob row collected — never the scores themselves);
-                # deterministic per-batch file, atomic replace
-                from tdigest_spark.operators.digest_agg import tdigest_agg
-                from tdigest_spark.sketch.tdigest import TDigest
+                    .select(F.col("corpus_id").alias("canon_url"))
+                    .distinct()
+                    .localCheckpoint(eager=True)
+                )
+                n_contaminated = flagged.count()
+                if n_contaminated:
+                    out = out.join(F.broadcast(flagged), "canon_url", "left_anti")
+            if scoring:
+                from tdigest_spark.functions.quality import score_quality
+                from tdigest_spark.functions.textstats import (
+                    with_curation_signals,
+                    with_text_stats,
+                )
 
-                row = tdigest_agg(
-                    scored, "quality_prob", delta=score_digest_delta
-                ).collect()[0]["digest"]
-                cum = TDigest.from_row(row)
-                prior = _latest_score_digest(corpus_dir, before_batch=batch_id)
-                if prior is not None:
-                    cum = prior.merge(cum)
-                os.makedirs(os.path.join(corpus_dir, _STATE_SUB), exist_ok=True)
-                dpath = _score_digest_path(corpus_dir, batch_id)
-                with open(dpath + ".tmp", "wb") as f:
-                    f.write(cum.to_bytes())
-                os.replace(dpath + ".tmp", dpath)
-        out.write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, f"b{batch_id}")
-        )
-        os.makedirs(os.path.join(corpus_dir, _METRICS_SUB), exist_ok=True)
-        mpath = os.path.join(corpus_dir, _METRICS_SUB, f"b{batch_id}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "batch_id": batch_id,
-                    "rows_after_neardup": n_survived,
-                    "decontaminated": n_contaminated,
-                    "quality_rejected": n_quality_dropped,
-                    "rows_out": n_survived - n_contaminated - n_quality_dropped,
-                    "mean_quality": mean_quality,
-                    "applied_quality_threshold": applied,
-                },
-                f,
+                scored = score_quality(
+                    with_curation_signals(with_text_stats(out, text_col), text_col),
+                    weights=quality_weights,
+                )
+                added = [
+                    c for c in scored.columns
+                    if c not in out.columns and c != "quality_prob"
+                ]
+                scored = scored.drop(*added).localCheckpoint(eager=True)
+                applied = quality_threshold
+                if quality_quantile is not None:
+                    prior = _latest_score_digest(corpus_dir, before_batch=batch_id)
+                    if prior is not None and prior.total_weight > 0:
+                        adaptive = prior.quantile(quality_quantile)
+                        applied = (
+                            adaptive if applied is None else max(applied, adaptive)
+                        )
+                agg = scored.agg(
+                    F.count("*").alias("n"),
+                    F.avg("quality_prob").alias("mq"),
+                    F.sum(
+                        # NULL scores (e.g. empty/unextractable text) are
+                        # unquantifiable: any active bar rejects them, and
+                        # they are COUNTED — metrics must match the corpus
+                        F.when(
+                            F.lit(applied is not None)
+                            & (
+                                F.col("quality_prob").isNull()
+                                | (F.col("quality_prob") < F.lit(applied if applied is not None else 0.0))
+                            ),
+                            1,
+                        ).otherwise(0).cast("long")
+                    ).alias("nd"),
+                ).collect()[0]
+                mean_quality = agg["mq"]
+                n_quality_dropped = int(agg["nd"] or 0)
+                if applied is not None:
+                    out = scored.where(F.col("quality_prob") >= applied)
+                else:
+                    out = scored
+                if quality_quantile is not None and int(agg["n"] or 0) > 0:
+                    # fold THIS batch's scores into the cumulative digest
+                    # (one blob row collected — never the scores themselves);
+                    # deterministic per-batch file, atomic replace
+                    from tdigest_spark.operators.digest_agg import tdigest_agg
+                    from tdigest_spark.sketch.tdigest import TDigest
+
+                    row = tdigest_agg(
+                        scored, "quality_prob", delta=score_digest_delta
+                    ).collect()[0]["digest"]
+                    cum = TDigest.from_row(row)
+                    prior = _latest_score_digest(corpus_dir, before_batch=batch_id)
+                    if prior is not None:
+                        cum = prior.merge(cum)
+                    os.makedirs(os.path.join(corpus_dir, _STATE_SUB), exist_ok=True)
+                    dpath = _score_digest_path(corpus_dir, batch_id)
+                    with open(dpath + ".tmp", "wb") as f:
+                        f.write(cum.to_bytes())
+                    os.replace(dpath + ".tmp", dpath)
+            out.write.mode("overwrite").parquet(
+                os.path.join(corpus_dir, f"b{batch_id}")
             )
-        os.replace(tmp, mpath)
-        survivors.unpersist()
+            os.makedirs(os.path.join(corpus_dir, _METRICS_SUB), exist_ok=True)
+            mpath = os.path.join(corpus_dir, _METRICS_SUB, f"b{batch_id}.json")
+            tmp = mpath + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(
+                    {
+                        "batch_id": batch_id,
+                        "rows_after_neardup": n_survived,
+                        "decontaminated": n_contaminated,
+                        "quality_rejected": n_quality_dropped,
+                        "rows_out": n_survived - n_contaminated - n_quality_dropped,
+                        "mean_quality": mean_quality,
+                        "applied_quality_threshold": applied,
+                    },
+                    f,
+                )
+            os.replace(tmp, mpath)
+        finally:
+            # released on every path: a failed batch must not leave its
+            # pin in the CacheManager for the life of the session
+            survivors.unpersist()
 
     return neardup_ingest_sink(
         fresh,

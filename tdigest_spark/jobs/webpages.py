@@ -1,6 +1,6 @@
 """The flagship 100 TB-shaped job: sketch per-document features of the
-Common-Crawl-style web-pages table, with salted skew handling,
-per-bucket checkpoints (resume), lineage and metrics — runnable via
+Common-Crawl-style web-pages table, with per-bucket checkpoints
+(resume), lineage and metrics — runnable via
 ``spark-submit --py-files`` (north_rule).
 
 Execution shape at scale (SURVEY.md §3.1/§4):
@@ -8,7 +8,8 @@ Execution shape at scale (SURVEY.md §3.1/§4):
   codegen'd generator/Iceberg scan  ->  feature expressions (JVM)
   ->  mapInPandas partial sketches per (partition x lang)   [no shuffle
       of raw rows; only O(delta) digest structs + fixed-size blobs]
-  ->  salted two-level merge (lang is 45%-'en' skewed by design)
+  ->  per-lang merge (lang is 45%-'en' skewed by design, but the hot
+      'en' reducer sees one partial per input partition, not its rows)
   ->  per-lang + global rank statistics.
 
 Checkpointing: the id-range is split into ``n_buckets`` contiguous
@@ -52,13 +53,11 @@ def sketch_webpages(
     spark: SparkSession,
     pages: DataFrame,
     delta: int = 200,
-    salt: int | None = 16,
 ) -> DataFrame:
     """ONE pass over pages -> per-lang t-digest of text length + HLL of
     urls, fused into a single partial stage (at 100 TB the scan
-    dominates; every extra pass doubles it). ``salt`` bounds merge
-    fan-in for the skewed 'en' group (two-level tree merge); at modest
-    partial counts pass ``salt=None`` for one fewer stage.
+    dominates; every extra pass doubles it), then one per-lang merge of
+    the digest and HLL partials together.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -109,25 +108,6 @@ def sketch_webpages(
                 "digest": [_merge_rows(list(pdf["digest"]))],
                 "hll": [h.to_bytes()],
             }
-        )
-
-    if salt:
-        salted = partials.withColumn(
-            "__salt", (F.spark_partition_id() % salt).cast("int")
-        )
-        mid_schema = T.StructType(
-            [T.StructField("__salt", T.IntegerType())] + list(part_schema.fields)
-        )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge_group(pdf)
-            out.insert(0, "__salt", pdf["__salt"].iloc[0])
-            return out
-
-        partials = (
-            salted.groupBy("__salt", "lang")
-            .applyInPandas(merge_salted, mid_schema)
-            .drop("__salt")
         )
 
     merged = partials.groupBy("lang").applyInPandas(merge_group, part_schema)
@@ -250,9 +230,7 @@ def bench_sketch_webpages(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic pages (sf_dir unused — input is generated)."""
     cpus = int(spark.sparkContext.defaultParallelism)
     pages = synth_webpages(spark, BENCH_DOCS, n_partitions=cpus * 2)
-    # salt=None: at 64 partials/lang a direct merge is one fewer stage;
-    # salting pays off at 1e4+ partials (tested separately)
-    out = sketch_webpages(spark, pages, delta=200, salt=None)
+    out = sketch_webpages(spark, pages, delta=200)
     return out.withColumn("n_docs_total", F.lit(BENCH_DOCS)).withColumnRenamed(
         "n_docs", "n_docs_lang"
     ).withColumnRenamed("n_docs_total", "n_docs")

@@ -9,23 +9,23 @@ partial+final aggregate the reference models as ``Monoid``/``Reducer``
            built per Arrow batch and merged lazily inside the partition.
            This is the map-side combine: raw rows never shuffle, only
            O(delta)-sized digest structs do.
-  stage 2  ``groupBy(keys).applyInPandas`` — merge partials per group.
-           For global (ungrouped) sketches or extreme partition counts,
-           a salted intermediate level bounds reducer fan-in
-           (tree-reduce; north_rule's explicit skew/salt handling).
+  stage 2  :func:`tdigest_merge_agg` — ONE merge, two paths by key
+           shape: grouped partials go through the JVM k1 merge
+           (window cumsum -> closed-form cluster ids -> hash-agg
+           rebuild); a keyless merge is one single-task greedy reduce.
 
 Plan shape at scale: scan (column-pruned to keys+value) -> Python
 partial agg (no shuffle) -> shuffle of ~n_partitions*n_groups tiny
 structs -> final merge. The shuffle volume is independent of row count,
-so the job scales linearly with input and the merge tree depth bounds
-any single reducer's fan-in.
+so the job scales linearly with input; a hot key contributes one
+partial per partition, never its raw rows.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
-import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -47,7 +47,6 @@ DIGEST_TYPE = T.StructType(
 
 _VALUE = "__td_value"
 _WEIGHT = "__td_weight"
-_SALT = "__td_salt"
 
 _NAN = float("nan")
 
@@ -62,52 +61,35 @@ def canon_key(key: tuple) -> tuple:
     emitting it writes an ordinary NaN."""
     return tuple(_NAN if isinstance(k, float) and k != k else k for k in key)
 
-# auto-insert an intermediate merge level once the single final reduce
-# would see more than this many partial digests (one per partition for
-# a global sketch): above it, the one task's deserialize-everything
-# cost dominates; below it, the extra stage costs more than it saves
-AUTO_SALT_PARTIALS = 512
+
+def _merge_digests(rows: Iterable, delta: int | None = None) -> TDigest:
+    """Greedy merge of digest rows. An explicit ``delta`` re-stamps
+    every input first, so digests built at different deltas merge and
+    the result compresses to ``delta``; ``None`` keeps the carried one."""
+    ds = [TDigest.from_row(r) for r in rows]
+    if delta is not None:
+        ds = [TDigest.empty(delta)] + [dataclasses.replace(d, delta=delta) for d in ds]
+    return TDigest.merge_all(ds)
 
 
-def _auto_salt(partials: DataFrame) -> int | None:
-    """Balanced two-level fan-in (sqrt of the partial count) when the
-    final single-task reduce would otherwise be the bottleneck — e.g.
-    1e6 input partitions become 1000-way then 1000-way merges.
-
-    The partial count must be read WITHOUT executing anything: under
-    AQE, ``.rdd`` on a plan containing an Exchange materializes the
-    upstream query stages eagerly (running those shuffles twice once
-    the real action fires). So ``.rdd.getNumPartitions()`` is only used
-    for exchange-free lineage (narrow ops over a scan — the common
-    global-sketch shape, where it plans without running a job); plans
-    with an Exchange use ``spark.sql.shuffle.partitions`` as the
-    post-shuffle width bound instead."""
-    plan = partials._jdf.queryExecution().executedPlan().toString()
-    # match Exchange as a plan-node token (line start after tree
-    # prefixes), not a bare substring that could hit unrelated plan text
-    if re.search(r"(?m)^[\s+*:!-]*Exchange", plan):
-        try:
-            n = int(partials.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            # e.g. "auto" under some AQE runtimes; .rdd would execute the
-            # upstream stages, so assume wide and salt — an unnecessary
-            # sqrt level costs one tiny extra stage, an absent one costs
-            # a single-task reduce over every partial
-            n = 4 * AUTO_SALT_PARTIALS
-    else:
-        n = partials.rdd.getNumPartitions()
-    if n > AUTO_SALT_PARTIALS:
-        return max(2, math.isqrt(n))
-    return None
+def _merge_rows(rows: Iterable, delta: int | None = None) -> dict:
+    """Final-level merge: greedy merge, then compress to the public delta."""
+    return _merge_digests(rows, delta).compressed().to_row()
 
 
-def _merge_rows(rows: Sequence, compress: bool = True) -> dict:
-    d = TDigest.merge_all([TDigest.from_row(r) for r in rows])
-    # non-final levels ship at working delta (see ship_compressed):
-    # small on the wire, and strictly better accuracy than either
-    # shipping the lazy concat or over-compressing to the public delta
-    d = d.compressed() if compress else d.ship_compressed()
-    return d.to_row()
+def _reduce_keyless(
+    partials: DataFrame, digest_col: str, delta: int | None = None
+) -> DataFrame:
+    """The keyless final level: every partial digest goes to one task,
+    which merges them greedily into the single output row."""
+
+    def reduce(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = (r for pdf in it for r in pdf[digest_col])
+        yield pd.DataFrame({digest_col: [_merge_rows(rows, delta)]})
+
+    return partials.repartition(1).mapInPandas(
+        reduce, T.StructType([T.StructField(digest_col, DIGEST_TYPE, True)])
+    )
 
 
 def tdigest_agg(
@@ -117,8 +99,6 @@ def tdigest_agg(
     delta: int = 200,
     weight_col: str | None = None,
     digest_col: str = "digest",
-    salt: int | None = None,
-    merge_engine: str = "sql",
     build_engine: str = "pandas",
 ) -> DataFrame:
     """Aggregate ``value_col`` into one t-digest per group.
@@ -126,21 +106,10 @@ def tdigest_agg(
     Returns a DataFrame ``by... , digest_col struct`` with exactly one
     row per group (one row total when ``by`` is empty).
 
-    ``salt``: intermediate merge fan-in for groups whose partial count
-    is huge (e.g. 1e5 input partitions) or whose keys are skewed —
-    partials are first merged within ``hash(partition) % salt``
-    buckets, then across buckets (two-level tree merge). ``None``
-    (default) = automatic for GLOBAL sketches: when the partial count
-    exceeds ``AUTO_SALT_PARTIALS`` a balanced sqrt-fan-in level is
-    inserted, so a million-partition scan never funnels a million
-    structs into one final task. Pass ``0`` to force single-level.
-
-    ``merge_engine`` (grouped only): ``"sql"`` (default — pure JVM
-    expression merge, ~10x faster at thousands of groups AND measured
-    unbiased at mid-quantiles: avg p50 error 0.00 vs -1.2% for the
-    greedy pass over 10k uniform groups, BENCH.md §1d) or ``"pandas"``
-    (the greedy vector merge in the Python worker, kept for parity with
-    the reference's sequential algorithm).
+    The map side builds one digest per (input partition x group) in
+    the Python worker; those partials go to :func:`tdigest_merge_agg`.
+    A skewed key therefore costs its reducer one partial per input
+    partition, never its raw rows.
 
     ``build_engine``: ``"pandas"`` (default — vectorized partial build,
     shuffle shrinks to O(partitions x groups) structs) or ``"sql"``
@@ -190,181 +159,63 @@ def tdigest_agg(
         yield pd.DataFrame(data)
 
     partials = src.mapInPandas(build_partials, out_schema)
-
-    def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {c: [pdf[c].iloc[0]] for c in by}
-        out[digest_col] = [_merge_rows(list(pdf[digest_col]))]
-        return pd.DataFrame(out)
-
-    if salt is None and not by:
-        salt = _auto_salt(partials)
-    if salt:
-        salted_schema = T.StructType(
-            [T.StructField(_SALT, T.IntegerType(), False)] + list(out_schema.fields)
-        )
-        # one partial per (input partition x key) -> spreading by source
-        # partition id gives a balanced, deterministic bucket assignment
-        lvl1 = partials.withColumn(
-            _SALT, (F.spark_partition_id() % salt).cast("int")
-        )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = {_SALT: [pdf[_SALT].iloc[0]]}
-            for c in by:
-                out[c] = [pdf[c].iloc[0]]
-            out[digest_col] = [_merge_rows(list(pdf[digest_col]), compress=False)]
-            return pd.DataFrame(out)
-
-        mid = lvl1.groupBy(_SALT, *by).applyInPandas(merge_salted, salted_schema)
-        partials = mid.drop(_SALT)
-
     if by:
-        if merge_engine == "sql":
-            return tdigest_merge_agg_sql(
-                partials, by=by, digest_col=digest_col, delta=delta
-            )
-        return partials.groupBy(*by).applyInPandas(merge_partials, out_schema)
-    # global sketch: single final reduce over (salted-or-not) partials
-    return partials.repartition(1).mapInPandas(
-        lambda it: iter(
-            [
-                pd.DataFrame(
-                    {digest_col: [_merge_rows([r for pdf in it for r in pdf[digest_col]])]}
-                )
-            ]
-        ),
-        T.StructType([T.StructField(digest_col, DIGEST_TYPE, True)]),
-    )
+        return tdigest_merge_agg(partials, by=by, digest_col=digest_col, delta=delta)
+    # already one partial per input partition: straight to the reduce
+    return _reduce_keyless(partials, digest_col)
 
 
 def tdigest_merge_agg(
     df: DataFrame,
     by: Sequence[str] = (),
     digest_col: str = "digest",
-    salt: int | None = None,
+    delta: int | None = None,
 ) -> DataFrame:
     """Merge an existing digest column (the reference's ``<>``/``mconcat``,
     ``Tree/Internal.hs:143-153``): one merged digest per group.
 
-    Same partial/final shape as :func:`tdigest_agg` — partition-local
-    merges first, so only one digest per (partition x group) shuffles.
-    ``salt`` as in :func:`tdigest_agg`: ``None`` auto-inserts a sqrt
-    intermediate level for GLOBAL merges over many partitions, ``0``
-    forces single-level.
+    The merge is associative within the published bound, so the merge
+    tree's shape is free; the path is chosen by key shape alone:
+
+    - GROUPED (``by`` non-empty): digest merge + k1 compression entirely
+      in JVM expressions. Instead of the greedy sequential pass
+      (``merge``, ``Vector/Internal.hs:142-167``), centroids get a
+      closed-form cluster id ``floor(ksize(q_mid, delta))`` from their
+      mid-rank — the ksize function is monotone, so clusters partition
+      the sorted centroid order and every cluster's q-width is
+      <= 1/delta: a valid t-digest construction with the same published
+      rank-error bound (exact in lossless mode, where every centroid
+      keeps its own cluster). Physical plan: explode -> window cumsum
+      per group -> hash-agg weighted means -> sort_array(collect_list)
+      rebuild; no Python worker, ~10x faster than a per-group pandas
+      merge at thousands of groups (BENCH.md §1d).
+    - KEYLESS (``by`` empty): a partition-local greedy merge, then one
+      single-task greedy reduce over one partial per partition. This
+      plans as two narrow Python stages and one exchange; the keyless
+      JVM merge would add window/aggregate stages whose driver planning
+      alone costs more than the reduce.
+
+    ``delta``: the output compression. ``None`` keeps the inputs'
+    carried delta; an explicit value re-compresses every group to it.
     """
     by = list(by)
-    out_schema = T.StructType(
-        [df.schema[c] for c in by] + [T.StructField(digest_col, DIGEST_TYPE, True)]
-    )
-    src = df.select(*by, digest_col)
+    if by:
+        ex = _explode_digests(df, by, digest_col)
+        return _k1_cluster_rebuild(ex, by, digest_col, delta)
+    schema = T.StructType([T.StructField(digest_col, DIGEST_TYPE, True)])
 
     def partial_merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[tuple, TDigest] = {}
+        acc = None
         for pdf in batches:
-            groups = (
-                pdf.groupby(by, sort=False, dropna=False) if by else [((), pdf)]
-            )
-            for key, g in groups:
-                key = canon_key(key if isinstance(key, tuple) else (key,))
-                d = TDigest.merge_all([TDigest.from_row(r) for r in g[digest_col]])
-                accs[key] = accs[key].merge(d) if key in accs else d
-        if not accs:
-            return
-        data: dict[str, list] = {c: [] for c in by}
-        data[digest_col] = []
-        for key, d in accs.items():
-            for c, k in zip(by, key):
-                data[c].append(k)
-            data[digest_col].append(d.ship_compressed().to_row())
-        yield pd.DataFrame(data)
+            d = _merge_digests(pdf[digest_col], delta)
+            acc = d if acc is None else acc.merge(d)
+        if acc is not None:
+            # ship at the WORKING delta, as the build's partials do
+            yield pd.DataFrame({digest_col: [acc.ship_compressed().to_row()]})
 
-    partials = src.mapInPandas(partial_merge, out_schema)
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {c: [pdf[c].iloc[0]] for c in by}
-        out[digest_col] = [_merge_rows(list(pdf[digest_col]))]
-        return pd.DataFrame(out)
-
-    if by:
-        return partials.groupBy(*by).applyInPandas(final, out_schema)
-    if salt is None:
-        salt = _auto_salt(partials)
-    if salt:
-        # intermediate level: partial_merge is idempotent over digest
-        # rows, so re-running it after a salt-width repartition merges
-        # each bucket down to one struct before the final reduce
-        partials = partials.repartition(salt).mapInPandas(partial_merge, out_schema)
-    return partials.repartition(1).mapInPandas(
-        lambda it: iter(
-            [
-                pd.DataFrame(
-                    {digest_col: [_merge_rows([r for pdf in it for r in pdf[digest_col]])]}
-                )
-            ]
-        ),
-        T.StructType([T.StructField(digest_col, DIGEST_TYPE, True)]),
+    return _reduce_keyless(
+        df.select(digest_col).mapInPandas(partial_merge, schema), digest_col, delta
     )
-
-
-def tdigest_merge_agg_sql(
-    df: DataFrame,
-    by: Sequence[str] = (),
-    digest_col: str = "digest",
-    delta: int | None = None,
-) -> DataFrame:
-    """Digest merge + k1 compression entirely in JVM expressions — the
-    pandas-free merge stage (SURVEY.md §8 round-2 candidate, now done).
-
-    Instead of the greedy sequential pass (``merge``,
-    ``Vector/Internal.hs:142-167``), centroids get a closed-form
-    cluster id ``floor(ksize(q_mid, delta))`` from their mid-rank —
-    the ksize function is monotone, so clusters partition the sorted
-    centroid order and every cluster's q-width is <= 1/delta: a valid
-    t-digest construction with the same published rank-error bound
-    (boundaries differ slightly from the greedy pass, values agree
-    within bound; identical — exact — in lossless mode where every
-    centroid keeps its own cluster).
-
-    Physical plan: explode (generate) -> window cumsum per group ->
-    hash-agg weighted means -> sort_array(collect_list) rebuild.
-    Everything whole-stage-codegen except the window sort; no Python
-    worker is involved, so this path wins when group count is large
-    (no Arrow hop, no per-group pandas overhead).
-
-    KEYLESS merges (``by=[]``) run TWO levels: the centroid rows are
-    first clustered within ``spark_partition_id() % s`` salt buckets
-    (k1 clustering is itself a valid re-compression, so the composition
-    stays within the published bound — and is exact in lossless mode),
-    then the bounded O(s x delta) survivors go through the final
-    keyless pass. Without this, the final window's empty partition spec
-    would sort EVERY input centroid in one task — O(groups x delta)
-    rows for a cube/rollup grand total.
-    """
-    by = list(by)
-    ex = _explode_digests(df, by, digest_col)
-    if not by:
-        salt = "__td_msalt"
-        try:
-            s = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            s = 32
-        s = max(2, min(64, s))
-        # intermediate level clusters at the WORKING delta (2x public,
-        # same policy as ship_compressed) so the double compression
-        # doesn't compound error; the final pass enforces the public
-        # delta. With delta=None the working factor applies to the
-        # CARRIED per-group max delta instead.
-        salted = ex.withColumn(salt, F.spark_partition_id() % F.lit(s))
-        if delta is None:
-            mid = _k1_cluster_rebuild(
-                salted, [salt], digest_col, None, carried_mult=TDigest.WORK_MULT
-            )
-        else:
-            mid = _k1_cluster_rebuild(
-                salted, [salt], digest_col, TDigest.WORK_MULT * delta
-            )
-        ex = _explode_digests(mid.select(digest_col), [], digest_col)
-    return _k1_cluster_rebuild(ex, by, digest_col, delta)
 
 
 def _explode_digests(
@@ -399,17 +250,14 @@ def _explode_digests(
 
 
 def _k1_cluster_rebuild(
-    ex: DataFrame, by: Sequence[str], digest_col: str, delta: int | None,
-    carried_mult: int = 1,
+    ex: DataFrame, by: Sequence[str], digest_col: str, delta: int | None
 ) -> DataFrame:
     """The JVM k1 clustering core: ``ex`` rows are weighted points
     (``__m``, ``__w``, plus ``__vmin``/``__vmax``/``__delta`` carries)
     per group; assign each its closed-form cluster id from mid-rank,
     aggregate clusters, rebuild digest structs. Shared by the digest
     MERGE (exploded centroids) and the direct SQL BUILD (raw rows as
-    singletons). ``carried_mult`` scales the CARRIED delta (the
-    delta=None path) for working-delta intermediate passes — the
-    stamped ``delta`` field stays the carried public value."""
+    singletons). ``delta=None`` clusters at the CARRIED per-group delta."""
     by = list(by)
     c = F.col
     from pyspark.sql import Window as W
@@ -426,7 +274,7 @@ def _k1_cluster_rebuild(
     d_out = (
         F.lit(delta).cast("double")
         if delta is not None
-        else F.max("__delta").over(tot).cast("double") * F.lit(float(carried_mult))
+        else F.max("__delta").over(tot).cast("double")
     )
     cum = F.sum("__w").over(win) - c("__w") / 2.0
     tw = F.sum("__w").over(tot)
@@ -485,7 +333,7 @@ def tdigest_agg_sql(
     overhead — this path drops it and lets Tungsten sort/aggregate raw
     (key, value, weight) rows (measured ~4x faster at 1e5 groups,
     BENCH.md). Same construction validity and rank-error bound as
-    ``tdigest_merge_agg_sql`` (cluster q-widths <= 1/delta); exact in
+    the grouped :func:`tdigest_merge_agg` (cluster q-widths <= 1/delta); exact in
     lossless mode. NULL and NaN values are dropped, and with a
     ``weight_col`` so are NULL/NaN/non-positive weights — the exact
     filter ``TDigest.from_values`` applies, so both build engines see
@@ -498,11 +346,11 @@ def tdigest_agg_sql(
     by = list(by)
     if not by:
         # the ungrouped window would sort EVERY raw row in one task —
-        # the global regime belongs to the partial build + auto-salt
+        # the global regime belongs to the partial build
         raise ValueError(
             "tdigest_agg_sql requires grouping keys (by=...): for a "
-            "global digest use the default partial build, whose merge "
-            "tree auto-salts at high partition counts"
+            "global digest use the default partial build, which ships "
+            "one partial per partition to the final reduce"
         )
     c = F.col
     v = c(value_col).cast("double")
@@ -1272,7 +1120,7 @@ def panes_to_sliding(
         panes, pane_sec, window_sec, slide_sec,
         payload_cols=[*by, digest_col], pane_col=pane_col,
     )
-    merged = tdigest_merge_agg_sql(
+    merged = tdigest_merge_agg(
         exploded, by=["__ws", *by], digest_col=digest_col, delta=delta
     )
     return merged.select(
@@ -1427,7 +1275,7 @@ def tdigest_cube(
         keep = [dims[i] for i in range(d) if mask & (1 << i)]
         # JVM merge path: ~10x faster than the pandas merge at high
         # group counts (see BENCH.md §1d), identical in lossless mode
-        lvl = tdigest_merge_agg_sql(
+        lvl = tdigest_merge_agg(
             parent.select(*keep, digest_col), by=keep, digest_col=digest_col
         )
         raw[mask] = lvl.localCheckpoint(eager=True) if mask in needed else lvl
@@ -1507,7 +1355,7 @@ def tdigest_grouping_sets(
             results[i] = computed[key]
             continue
         parent = computed[parent_for[i]]
-        lvl = tdigest_merge_agg_sql(
+        lvl = tdigest_merge_agg(
             parent.select(*sets[i], digest_col), by=sets[i], digest_col=digest_col
         )
         if key in reused:
@@ -1558,7 +1406,7 @@ def tdigest_rollup(
     cur = leaf
     for i in range(len(dims) - 1, -1, -1):
         keep = dims[:i]
-        cur = tdigest_merge_agg_sql(
+        cur = tdigest_merge_agg(
             cur.select(*keep, digest_col), by=keep, digest_col=digest_col
         )
         lvl = cur

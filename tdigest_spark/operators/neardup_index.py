@@ -72,14 +72,27 @@ def _index_rows(
 ) -> tuple[DataFrame, DataFrame]:
     """(band_rows, shingle_rows) for ``df``: the one text pass.
     band_rows = (id, band, bh, shard); shingle_rows = (id, sh)."""
-    sh = shingles(df, id_col, text_col, shingle_k).select(
+    sh = _shingle_rows(df, id_col, text_col, shingle_k)
+    return _band_rows(sh, id_col, n_hashes, bands, n_shards), sh
+
+
+def _shingle_rows(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+) -> DataFrame:
+    """(id, sh): hashed word-k-gram shingles."""
+    return shingles(df, id_col, text_col, shingle_k).select(
         id_col, F.xxhash64("s").alias("sh")
     )
+
+
+def _band_rows(
+    sh: DataFrame, id_col: str, n_hashes: int, bands: int, n_shards: int
+) -> DataFrame:
+    """(id, band, bh, shard) from hashed shingle rows."""
     sigs = minhash_signatures(sh, id_col, n_hashes, hash_col="sh")
-    band_rows = lsh_bands(sigs, id_col, n_hashes, bands).withColumn(
+    return lsh_bands(sigs, id_col, n_hashes, bands).withColumn(
         "shard", F.pmod(F.col("bh"), F.lit(n_shards)).cast("int")
     )
-    return band_rows, sh
 
 
 def build_neardup_index(
@@ -184,17 +197,18 @@ def neardup_pairs_indexed(
 
     p = _load_params(index_dir)
     fmt = p.get("fmt")
-    q_bands, q_sh = _index_rows(
-        batch, id_col, text_col,
-        p["shingle_k"], p["n_hashes"], p["bands"], p["n_shards"],
-    )
     # two consumers of the batch's band rows (probe-set collect + the
-    # join) and two of its shingles (signatures above already consumed
-    # once; verify below) — pin the small batch tables
-    from pyspark import StorageLevel
-
-    q_bands = q_bands.persist(StorageLevel.MEMORY_AND_DISK)
-    q_sh = q_sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # join) and two of its shingles (signatures + verify): eager local
+    # checkpoints run the one text pass once. Their blocks are freed
+    # with the returned DataFrame, so no cache pin outlives the call
+    # on any path (a persist() here could only be released by the
+    # caller's action, i.e. never).
+    q_sh = _shingle_rows(batch, id_col, text_col, p["shingle_k"]).localCheckpoint(
+        eager=True
+    )
+    q_bands = _band_rows(
+        q_sh, id_col, p["n_hashes"], p["bands"], p["n_shards"]
+    ).localCheckpoint(eager=True)
 
     idx_bands = read_table(
         spark, os.path.join(index_dir, _BANDS_SUB), fmt=fmt
@@ -230,9 +244,10 @@ def neardup_pairs_indexed(
     # verify over the union shingle table: id_a ids come from the
     # batch, id_b from the index — jaccard_verify keys each side by id
     both_sh = q_sh.unionByName(idx_sh)
-    out = jaccard_verify(cands, both_sh, id_col, hash_col="sh").where(
-        F.col("jaccard") >= threshold
-    )
+    # pin_pairs=False: a pin inside verify would leak the same way
+    out = jaccard_verify(
+        cands, both_sh, id_col, hash_col="sh", pin_pairs=False
+    ).where(F.col("jaccard") >= threshold)
     return out.select(
         F.col("id_a").alias("batch_id"),
         F.col("id_b").alias("index_id"),

@@ -213,16 +213,6 @@ def sample_k(
             if chunks:
                 yield final_topk(pd.concat(chunks, ignore_index=True))
 
-        # same discipline as the digest global reduce (shared
-        # _auto_salt: AQE-safe width probe): above ~512 partials insert
-        # a sqrt-fan-in intermediate top-k level so the final task
-        # never sees O(partitions x k) candidate rows
-        from .digest_agg import _auto_salt
-
-        s = _auto_salt(candidates)
-        if s:
-            candidates = candidates.repartition(s).mapInPandas(
-                partial_topk, mid_schema
-            )
+        # partial_topk already cut each partition to k candidates
         out = candidates.repartition(1).mapInPandas(final_global, out_schema)
     return out

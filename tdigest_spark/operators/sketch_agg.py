@@ -404,17 +404,8 @@ def sketch_build(
 
 
 def _global_reduce(partials: DataFrame, merge_fn, out_schema) -> DataFrame:
-    """Single-row global reduce with an AUTOMATIC intermediate level
-    when the partial count is large (same policy as
-    ``digest_agg._auto_salt``): blobs merge associatively, so an extra
-    sqrt-fan-in ``repartition(s) -> merge`` level bounds the final
-    task's input at O(sqrt(partitions)) blobs instead of one blob per
-    input partition."""
-    from tdigest_spark.operators.digest_agg import _auto_salt
-
-    s = _auto_salt(partials)
-    if s:
-        partials = partials.repartition(s).mapInPandas(merge_fn, out_schema)
+    """Single-row global reduce: the partials (already one per input
+    partition after the partition-local combine) go to one task."""
     return partials.repartition(1).mapInPandas(merge_fn, out_schema)
 
 

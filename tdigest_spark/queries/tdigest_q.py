@@ -14,6 +14,8 @@ values; see SURVEY.md §5).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,25 +91,35 @@ def td_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def td_merge_engines_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Digest merge — the reference's ``<>``/``mconcat``
-    (Tree/Internal.hs:143-153) — through BOTH merge engines in one
-    query: value-banded partial digests per event_type merged by (a)
-    ``tdigest_merge_agg_sql`` (pure JVM expressions: explode -> window
-    cumsum -> closed-form k1 cluster ids -> hash-agg rebuild, no Python
-    worker) and (b) ``tdigest_merge_agg`` (the pandas greedy vector
-    merge, parity with the reference's sequential algorithm). Lossless,
-    so both hash-match quantile_cont exactly AND each other.
-    (Consolidates round-2's td_merge_halves_events +
+    (Tree/Internal.hs:143-153) — through BOTH paths of
+    ``tdigest_merge_agg`` in one query: value-banded partial digests
+    per event_type merged by (a) the grouped path (pure JVM
+    expressions: explode -> window cumsum -> closed-form k1 cluster ids
+    -> hash-agg rebuild, no Python worker) and (b) the keyless path
+    (partition-local then single-task greedy merge, parity with the
+    reference's sequential algorithm), run once per event_type and
+    unioned. Lossless, so both hash-match quantile_cont exactly AND
+    each other. (Consolidates round-2's td_merge_halves_events +
     td_merge_sql_events.)"""
-    from tdigest_spark.operators.digest_agg import tdigest_merge_agg_sql
-
     ev = load(spark, sf_dir, "events").select("event_type", "value")
     banded = ev.withColumn("band", (F.col("value") > 30).cast("int"))
     partial = tdigest_agg(banded, "value", by=["event_type", "band"], delta=LOSSLESS)
-    # O(groups x bands) digest rows feed BOTH merge engines — compute
+    # O(groups x bands) digest rows feed BOTH merge paths — compute
     # the O(rows) partial build once
-    partial = partial.localCheckpoint(eager=True)
-    m_sql = tdigest_merge_agg_sql(partial.drop("band"), by=["event_type"])
-    m_pd = tdigest_merge_agg(partial.drop("band"), by=["event_type"])
+    partial = partial.localCheckpoint(eager=True).drop("band")
+    m_sql = tdigest_merge_agg(partial, by=["event_type"])
+    types = sorted(
+        r["event_type"] for r in partial.select("event_type").distinct().collect()
+    )
+    m_pd = functools.reduce(
+        DataFrame.unionByName,
+        [
+            tdigest_merge_agg(partial.where(F.col("event_type") == t)).select(
+                F.lit(t).alias("event_type"), "digest"
+            )
+            for t in types
+        ],
+    )
     s_sql = tdigest_stats(m_sql, {"p50_sql": ("quantile", 0.5), "n_sql": ("total_weight",)})
     s_pd = tdigest_stats(m_pd, {"p50_pandas": ("quantile", 0.5), "n_pandas": ("total_weight",)})
     out = s_sql.join(s_pd, "event_type")

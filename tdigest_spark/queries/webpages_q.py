@@ -55,7 +55,7 @@ def wp_textlen_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity with DuckDB over the regenerated table."""
     pages = synth_webpages(spark, N_DOCS)
     feats = with_text_features(pages).select("lang", "n_chars")
-    dig = tdigest_agg(feats, "n_chars", by=["lang"], delta=LOSSLESS, salt=8)
+    dig = tdigest_agg(feats, "n_chars", by=["lang"], delta=LOSSLESS)
     out = tdigest_stats(
         dig,
         {

@@ -14,7 +14,8 @@ from ``range()`` through whole-stage-codegen expressions, so generating
 10^12 rows on a cluster is embarrassingly parallel and shuffle-free.
 
 ``lang`` is deliberately skewed (45% ``en`` ... 1.5% ``ko``) to
-exercise the salted-repartition path (north_rule skew handling).
+exercise skewed-key grouping (north_rule skew handling): the hot
+``en`` reducer must see per-partition partials, not raw rows.
 """
 
 from __future__ import annotations

@@ -226,97 +226,101 @@ def neardup_ingest_sink(
             batch_df, id_col, text_col,
             p["shingle_k"], p["n_hashes"], p["bands"], p["n_shards"],
         )
-        q_bands = q_bands.persist(StorageLevel.MEMORY_AND_DISK)
-        q_sh = q_sh.persist(StorageLevel.MEMORY_AND_DISK)
+        # every pin is released on every path: a micro-batch that fails
+        # must not leave CacheManager entries for the life of the session
+        pins = [
+            q_bands.persist(StorageLevel.MEMORY_AND_DISK),
+            q_sh.persist(StorageLevel.MEMORY_AND_DISK),
+        ]
+        try:
+            idx_bands, idx_sh = _segment_tables(
+                spark, index_dir, manifest["segments"], p.get("fmt")
+            )
+            # probe side = committed index ∪ the batch itself, flagged —
+            # the same page fetched twice in one batch must collapse too
+            probe = q_bands.withColumn("is_new", F.lit(True))
+            if idx_bands is not None:
+                probe = probe.unionByName(
+                    _prune_probe(idx_bands, q_bands, max_probe_partitions)
+                    .withColumn("is_new", F.lit(False))
+                )
+            cands = (
+                q_bands.alias("q")
+                .join(
+                    probe.alias("x"),
+                    (F.col("q.band") == F.col("x.band"))
+                    & (F.col("q.bh") == F.col("x.bh")),
+                )
+                .select(
+                    F.col(f"q.{id_col}").alias("id_a"),
+                    F.col(f"x.{id_col}").alias("id_b"),
+                    F.col("x.is_new").alias("is_new"),
+                )
+                .where(F.col("id_a") != F.col("id_b"))
+                # within-batch pairs arrive in both orientations — keep the
+                # (larger, smaller) one so id_a is the non-canonical doc on
+                # BOTH pair kinds; cross pairs keep (batch, index) as-is
+                .where((~F.col("is_new")) | (F.col("id_a") > F.col("id_b")))
+                .distinct()
+                # sink-managed pin (pin_pairs=False below)
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            pins.append(cands)
+            both_sh = q_sh if idx_sh is None else q_sh.unionByName(idx_sh)
+            pairs = (
+                jaccard_verify(
+                    cands.drop("is_new"), both_sh, id_col,
+                    hash_col="sh", pin_pairs=False,
+                )
+                .where(F.col("jaccard") >= threshold)
+                .join(cands, ["id_a", "id_b"])
+                .select(
+                    F.col("id_a").alias("batch_doc"),
+                    F.col("id_b").alias("matched_doc"),
+                    "jaccard",
+                    F.col("is_new").alias("matched_in_batch"),
+                )
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            pins.append(pairs)
+            write_table(pairs, os.path.join(pairs_dir, f"b{batch_id}"))
 
-        idx_bands, idx_sh = _segment_tables(
-            spark, index_dir, manifest["segments"], p.get("fmt")
-        )
-        # probe side = committed index ∪ the batch itself, flagged —
-        # the same page fetched twice in one batch must collapse too
-        probe = q_bands.withColumn("is_new", F.lit(True))
-        if idx_bands is not None:
-            probe = probe.unionByName(
-                _prune_probe(idx_bands, q_bands, max_probe_partitions)
-                .withColumn("is_new", F.lit(False))
-            )
-        cands = (
-            q_bands.alias("q")
-            .join(
-                probe.alias("x"),
-                (F.col("q.band") == F.col("x.band"))
-                & (F.col("q.bh") == F.col("x.bh")),
-            )
-            .select(
-                F.col(f"q.{id_col}").alias("id_a"),
-                F.col(f"x.{id_col}").alias("id_b"),
-                F.col("x.is_new").alias("is_new"),
-            )
-            .where(F.col("id_a") != F.col("id_b"))
-            # within-batch pairs arrive in both orientations — keep the
-            # (larger, smaller) one so id_a is the non-canonical doc on
-            # BOTH pair kinds; cross pairs keep (batch, index) as-is
-            .where((~F.col("is_new")) | (F.col("id_a") > F.col("id_b")))
-            .distinct()
-            # sink-managed pin (pin_pairs=False below): one call per
-            # micro-batch must not leak a CacheManager entry per batch
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        both_sh = q_sh if idx_sh is None else q_sh.unionByName(idx_sh)
-        pairs = (
-            jaccard_verify(
-                cands.drop("is_new"), both_sh, id_col,
-                hash_col="sh", pin_pairs=False,
-            )
-            .where(F.col("jaccard") >= threshold)
-            .join(cands, ["id_a", "id_b"])
-            .select(
-                F.col("id_a").alias("batch_doc"),
-                F.col("id_b").alias("matched_doc"),
-                "jaccard",
-                F.col("is_new").alias("matched_in_batch"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        write_table(pairs, os.path.join(pairs_dir, f"b{batch_id}"))
+            if drop_matched:
+                # batch_doc is the non-canonical side of every pair kind
+                dropped = pairs.select(F.col("batch_doc").alias(id_col)).distinct()
+                keep_bands = q_bands.join(dropped, id_col, "left_anti")
+                keep_sh = q_sh.join(dropped, id_col, "left_anti")
+                survivors = batch_df.join(dropped, id_col, "left_anti")
+            else:
+                keep_bands, keep_sh = q_bands, q_sh
+                survivors = batch_df
+            if on_survivors is not None:
+                on_survivors(survivors, batch_id)
 
-        if drop_matched:
-            # batch_doc is the non-canonical side of every pair kind
-            dropped = pairs.select(F.col("batch_doc").alias(id_col)).distinct()
-            keep_bands = q_bands.join(dropped, id_col, "left_anti")
-            keep_sh = q_sh.join(dropped, id_col, "left_anti")
-            survivors = batch_df.join(dropped, id_col, "left_anti")
-        else:
-            keep_bands, keep_sh = q_bands, q_sh
-            survivors = batch_df
-        if on_survivors is not None:
-            on_survivors(survivors, batch_id)
-
-        if not keep_bands.isEmpty():
-            seg = os.path.join(_BATCHES_SUB, f"b{batch_id}")
-            seg_abs = os.path.join(index_dir, seg)
-            fmt = write_table(
-                keep_bands, os.path.join(seg_abs, _BANDS_SUB),
-                partition_by=("band", "shard"),
-            )
-            write_table(keep_sh, os.path.join(seg_abs, _SHINGLES_SUB))
-            if p.get("fmt") != fmt:
-                # pin the actual table format for later sessions' reads
-                # (idempotent rewrite — same content on replay)
-                p["fmt"] = fmt
-                tmp = os.path.join(index_dir, _PARAMS_FILE) + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(p, f)
-                os.replace(tmp, os.path.join(index_dir, _PARAMS_FILE))
-            manifest["segments"] = manifest["segments"] + [seg]
-        # an all-dropped batch still advances the replay marker —
-        # an empty segment directory would be unreadable parquet
-        manifest["last_batch"] = batch_id
-        _commit_manifest(index_dir, manifest)
-        q_bands.unpersist()
-        q_sh.unpersist()
-        cands.unpersist()
-        pairs.unpersist()
+            if not keep_bands.isEmpty():
+                seg = os.path.join(_BATCHES_SUB, f"b{batch_id}")
+                seg_abs = os.path.join(index_dir, seg)
+                fmt = write_table(
+                    keep_bands, os.path.join(seg_abs, _BANDS_SUB),
+                    partition_by=("band", "shard"),
+                )
+                write_table(keep_sh, os.path.join(seg_abs, _SHINGLES_SUB))
+                if p.get("fmt") != fmt:
+                    # pin the actual table format for later sessions' reads
+                    # (idempotent rewrite — same content on replay)
+                    p["fmt"] = fmt
+                    tmp = os.path.join(index_dir, _PARAMS_FILE) + ".tmp"
+                    with open(tmp, "w") as f:
+                        json.dump(p, f)
+                    os.replace(tmp, os.path.join(index_dir, _PARAMS_FILE))
+                manifest["segments"] = manifest["segments"] + [seg]
+            # an all-dropped batch still advances the replay marker —
+            # an empty segment directory would be unreadable parquet
+            manifest["last_batch"] = batch_id
+            _commit_manifest(index_dir, manifest)
+        finally:
+            for df in pins:
+                df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process)

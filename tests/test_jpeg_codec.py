@@ -297,3 +297,28 @@ def test_fill_bytes_before_markers_are_skipped():
     assert data[2] == 0xFF
     padded = data[:2] + b"\xff\xff" + data[2:]
     np.testing.assert_array_equal(jpeg_decode(padded), jpeg_decode(data))
+
+
+def test_decode_time_is_linear_in_stream_size():
+    """A >= 100 KB stream decodes at the same per-byte cost as a small
+    one: the bit reader drops consumed bits, so no step costs time
+    proportional to the bytes already read (an unmasked accumulator
+    made the 150 KB decode ~8x slower per byte than a 17 KB one)."""
+    import time
+
+    rng = np.random.default_rng(7)
+
+    def per_byte(side: int, reps: int) -> tuple[int, float]:
+        data = jpeg_encode(rng.integers(0, 256, (side, side), dtype=np.uint8), quality=95)
+        best = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            out = jpeg_decode(data)
+            best = min(best, time.perf_counter() - t0)
+        assert out.shape == (side, side)
+        return len(data), best / len(data)
+
+    _, small = per_byte(128, 3)
+    size, big = per_byte(384, 2)
+    assert size >= 100_000
+    assert big <= 3 * small, (big, small)

@@ -1,4 +1,4 @@
-"""Spark-layer tests for the t-digest UDAF: grouped/global/salted
+"""Spark-layer tests for the t-digest UDAF: grouped/global
 aggregation, stat extraction, DuckDB oracle parity in lossless mode."""
 
 import duckdb
@@ -68,22 +68,6 @@ def test_grouped_digest_matches_duckdb(spark, events, sf_dir):
     np.testing.assert_allclose(out["lo"], exp.iloc[:, 4], rtol=0)
     np.testing.assert_allclose(out["hi"], exp.iloc[:, 5], rtol=0)
     np.testing.assert_allclose(out["n"], exp.iloc[:, 6], rtol=0)
-
-
-def test_salted_equals_unsalted(spark, events):
-    """Two-level (salted) tree merge returns the same groups and
-    bound-level-equal quantiles as the direct merge."""
-    a = tdigest_stats(
-        tdigest_agg(events, "value", by=["event_type"], delta=100),
-        {"q": ("quantile", 0.5), "n": ("total_weight",)},
-    ).toPandas().set_index("event_type").sort_index()
-    b = tdigest_stats(
-        tdigest_agg(events, "value", by=["event_type"], delta=100, salt=4),
-        {"q": ("quantile", 0.5), "n": ("total_weight",)},
-    ).toPandas().set_index("event_type").sort_index()
-    assert list(a.index) == list(b.index)
-    np.testing.assert_allclose(a["n"], b["n"], rtol=0)  # weight conservation exact
-    np.testing.assert_allclose(a["q"], b["q"], rtol=0.05)
 
 
 def test_compressed_digest_rank_error(spark, events, sf_dir):
@@ -156,21 +140,39 @@ def test_nulls_dropped(spark):
     assert np.isnan(res.loc["b", "q"])
 
 
-def test_plan_shape_no_raw_shuffle(spark, events):
-    """Pandas merge engine: the plan must shuffle digests, not raw
-    rows — exactly one exchange, after the Python partial-agg map."""
-    dig = tdigest_agg(
-        events, "value", by=["event_type"], delta=100, merge_engine="pandas"
+def test_plan_shape_no_raw_shuffle(spark):
+    """Keyless build and merge over 32 input partitions: the plan ships
+    one partial per partition to a single-task reduce (one exchange,
+    no grouped pandas merge), the lossless global median is exact, and
+    the HLL estimate equals the one-partition build's."""
+    from tdigest_spark.operators.sketch_agg import sketch_build, sketch_estimates
+
+    src = spark.range(0, 10_000, 1, 32).select(
+        (F.col("id") % 1000).cast("double").alias("v"),
+        (F.col("id") % 5000).cast("string").alias("k"),
     )
+    dig = tdigest_agg(src, "v", delta=LOSSLESS)
     plan = dig._jdf.queryExecution().executedPlan().toString()
-    n_exchange = plan.count("Exchange")
-    assert n_exchange <= 2, plan  # hash exchange (+AQE wrapper) only
-    # partial python map must appear below the exchange in the tree
-    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("MapInPandas") == 2, plan  # partial build + reduce
+    assert plan.index("MapInPandas") < plan.index("Exchange") < plan.rindex("MapInPandas")
+    out = tdigest_stats(dig, {"p50": ("quantile", 0.5), "n": ("total_weight",)}).collect()[0]
+    assert out["p50"] == 499.5
+    assert out["n"] == 10_000
+
+    built = sketch_build(src, {"h": ("hll", "k")})
+    plan = built._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("MapInPandas") == 2, plan
+    spec = {"n": ("hll_estimate", "h")}
+    est = sketch_estimates(built, spec).collect()[0]["n"]
+    one = sketch_estimates(sketch_build(src.coalesce(1), {"h": ("hll", "k")}), spec)
+    assert est == one.collect()[0]["n"]  # register-max merge is exact
+    assert est == pytest.approx(5000, rel=0.05)
 
 
-def test_plan_shape_sql_merge_engine(spark, events):
-    """SQL merge engine (grouped default): the partial build is the
+def test_plan_shape_grouped_jvm_merge(spark, events):
+    """Grouped merges run in the JVM: the partial build is the
     ONLY Python stage — the merge is window + hash aggregates, and
     what shuffles is centroid rows derived from digests, never raw
     input rows (the map stage still runs before every exchange)."""
@@ -215,31 +217,35 @@ def test_tdigest_describe(spark, sf_dir):
         assert r["max_centroid_weight"] <= r["total_weight"]
 
 
-def test_tdigest_merge_agg_sql(spark, sf_dir):
-    """JVM-only merge path: lossless == python merge == exact; compressed
-    within rank bound with bounded centroid count."""
-    import numpy as np
-
-    from tdigest_spark.operators.digest_agg import (
-        tdigest_agg,
-        tdigest_merge_agg,
-        tdigest_merge_agg_sql,
-        tdigest_stats,
-    )
+def test_tdigest_merge_agg_grouped_matches_duckdb(spark, sf_dir):
+    """Grouped (JVM) merge of value-banded partials: lossless ==
+    DuckDB quantile_cont exactly; compressed within rank bound with a
+    bounded centroid count."""
+    from tdigest_spark.operators.digest_agg import tdigest_merge_agg
     from tdigest_spark.sources.tables import load
 
     ev = load(spark, sf_dir, "events").select("event_type", "value")
     banded = ev.withColumn("band", (F.col("value") > 30).cast("int"))
     LOSS = 2_000_000
     partial = tdigest_agg(banded, "value", by=["event_type", "band"], delta=LOSS)
-    m_sql = tdigest_merge_agg_sql(partial.drop("band"), by=["event_type"])
-    m_py = tdigest_merge_agg(partial.drop("band"), by=["event_type"])
-    s_sql = {r["event_type"]: r["p50"] for r in tdigest_stats(m_sql, {"p50": ("quantile", 0.5)}).collect()}
-    s_py = {r["event_type"]: r["p50"] for r in tdigest_stats(m_py, {"p50": ("quantile", 0.5)}).collect()}
-    assert s_sql == pytest.approx(s_py, abs=1e-9)  # both exact lossless
+    m = tdigest_merge_agg(partial.drop("band"), by=["event_type"])
+    got = {
+        r["event_type"]: (r["p50"], r["n"])
+        for r in tdigest_stats(
+            m, {"p50": ("quantile", 0.5), "n": ("total_weight",)}
+        ).collect()
+    }
+    exp = duckdb.sql(
+        f"SELECT event_type, quantile_cont(value, 0.5), count(value) "
+        f"FROM '{sf_dir}/events.parquet' GROUP BY event_type"
+    ).fetchall()
+    assert set(got) == {e for e, _, _ in exp}
+    for e, p50, n in exp:
+        assert got[e][0] == pytest.approx(p50, abs=1e-9)
+        assert got[e][1] == n
 
     partial2 = tdigest_agg(banded, "value", by=["event_type", "band"], delta=100)
-    m2 = tdigest_merge_agg_sql(partial2.drop("band"), by=["event_type"], delta=100)
+    m2 = tdigest_merge_agg(partial2.drop("band"), by=["event_type"], delta=100)
     vals = ev.toPandas()
     for r in m2.collect():
         d = r["digest"]
@@ -327,51 +333,6 @@ def test_tdigest_sliding_window_not_multiple_of_slide(spark):
     )
     ref = {r["ws"].timestamp(): r["n"] for r in ref}
     assert res == {k: float(v) for k, v in ref.items()}
-
-
-def test_global_merge_auto_salts_at_high_partial_count(spark, monkeypatch):
-    """With partial count above AUTO_SALT_PARTIALS the global digest
-    must get an automatic intermediate merge level (two-level tree, no
-    million-struct single reduce) — and still produce the same
-    lossless median."""
-    import tdigest_spark.operators.digest_agg as da
-    from pyspark.sql import functions as F
-
-    monkeypatch.setattr(da, "AUTO_SALT_PARTIALS", 8)
-    src = spark.range(0, 10_000, 1, 32).select(
-        (F.col("id") % 1000).cast("double").alias("v")
-    )
-    dig = da.tdigest_agg(src, "v", delta=1_000_000)
-    plan = dig._jdf.queryExecution().executedPlan().toString()
-    # intermediate level = the salted groupBy merge (FlatMapGroupsInPandas)
-    assert "FlatMapGroupsInPandas" in plan, plan
-    out = da.tdigest_stats(dig, {"p50": ("quantile", 0.5)}).collect()[0]
-    assert out["p50"] == pytest.approx(499.5, abs=1e-9)
-
-    # explicit salt=0 disables the extra level
-    dig0 = da.tdigest_agg(src, "v", delta=1_000_000, salt=0)
-    plan0 = dig0._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan0, plan0
-
-
-def test_sketch_global_merge_auto_two_level(spark, monkeypatch):
-    """The companion-sketch global reduce inserts the same automatic
-    intermediate level: three MapInPandas stages (partial, mid, final)
-    and an unchanged HLL estimate."""
-    import tdigest_spark.operators.digest_agg as da
-    from pyspark.sql import functions as F
-
-    from tdigest_spark.operators.sketch_agg import sketch_build, sketch_estimates
-
-    monkeypatch.setattr(da, "AUTO_SALT_PARTIALS", 8)
-    src = spark.range(0, 20_000, 1, 32).select(
-        (F.col("id") % 5000).cast("string").alias("k")
-    )
-    built = sketch_build(src, {"h": ("hll", "k")})
-    plan = built._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 3, plan
-    est = sketch_estimates(built, {"n": ("hll_estimate", "h")}).collect()[0]["n"]
-    assert est == pytest.approx(5000, rel=0.05)
 
 
 def test_tdigest_stats_chained_calls_fuse(spark, events):
@@ -504,49 +465,67 @@ def test_weighted_sql_build_equals_pandas_lossless(spark):
     assert ra == rb and len(ra) == 2
 
 
-def test_keyless_sql_merge_two_level(spark, events):
-    """Keyless tdigest_merge_agg_sql (the cube/rollup grand-total path)
-    must pre-cluster within salt buckets so no single window task sorts
-    every leaf centroid: the plan carries a Window partitioned by the
-    salt column, and the lossless result still equals the pandas global
-    merge exactly."""
-    from tdigest_spark.operators.digest_agg import (
-        tdigest_merge_agg,
-        tdigest_merge_agg_sql,
-    )
+def test_keyless_sql_merge_two_level(spark, events, sf_dir):
+    """Keyless merge (the cube/rollup grand-total path) runs two
+    Python levels — a partition-local merge, then one single-task
+    reduce — and the lossless result equals DuckDB quantile_cont."""
+    from tdigest_spark.operators.digest_agg import tdigest_merge_agg
 
     leaf = tdigest_agg(events, "value", by=["event_type"], delta=LOSSLESS)
-    m_sql = tdigest_merge_agg_sql(leaf.drop("event_type"), by=[])
-    plan = m_sql._jdf.queryExecution().executedPlan().toString()
-    assert "__td_msalt" in plan, plan  # pre-cluster level present
-    m_py = tdigest_merge_agg(leaf.drop("event_type"), by=[])
+    m = tdigest_merge_agg(leaf.drop("event_type"), by=[])
+    plan = m._jdf.queryExecution().executedPlan().toString()
+    # leaf build + partition-local merge + single-task reduce
+    assert plan.count("MapInPandas") == 3, plan
     spec = {"p50": ("quantile", 0.5), "p99": ("quantile", 0.99),
             "n": ("total_weight",)}
-    a = tdigest_stats(m_sql, spec).collect()[0]
-    b = tdigest_stats(m_py, spec).collect()[0]
-    assert a["n"] == b["n"]
-    assert a["p50"] == pytest.approx(b["p50"], abs=1e-9)
-    assert a["p99"] == pytest.approx(b["p99"], abs=1e-9)
+    a = tdigest_stats(m, spec).collect()[0]
+    exp = duckdb.sql(
+        f"SELECT quantile_cont(value, 0.5), quantile_cont(value, 0.99), "
+        f"count(value) FROM '{sf_dir}/events.parquet'"
+    ).fetchone()
+    assert a["p50"] == pytest.approx(exp[0], abs=1e-9)
+    assert a["p99"] == pytest.approx(exp[1], abs=1e-9)
+    assert a["n"] == exp[2]
+
+
+def _rank_err(vals: np.ndarray, est: float, q: float) -> float:
+    lo = np.searchsorted(vals, est, side="left") / len(vals)
+    hi = np.searchsorted(vals, est, side="right") / len(vals)
+    return 0.0 if lo <= q <= hi else min(abs(q - lo), abs(q - hi))
 
 
 def test_keyless_sql_merge_compressed_within_bound(spark, events):
-    """Two-level keyless merge at a REAL delta: the working-delta
-    intermediate plus final public-delta pass stays within the k1
+    """Keyless merge at a REAL delta: the working-delta partition-local
+    level plus the final public-delta reduce stays within the k1
     rank-error bound and the public centroid budget."""
-    import duckdb as _duck
-
-    from tdigest_spark.operators.digest_agg import tdigest_merge_agg_sql
+    from tdigest_spark.operators.digest_agg import tdigest_merge_agg
 
     leaf = tdigest_agg(events, "value", by=["event_type"], delta=100)
-    m = tdigest_merge_agg_sql(leaf.drop("event_type"), by=[], delta=100)
+    m = tdigest_merge_agg(leaf.drop("event_type"), by=[], delta=100)
     row = m.collect()[0]["digest"]
     assert len(row["means"]) <= 202
     assert list(row["means"]) == sorted(row["means"])
     est = tdigest_stats(m, {"p50": ("quantile", 0.5)}).collect()[0]["p50"]
     vals = np.sort(events.select("value").toPandas()["value"].to_numpy())
-    lo = np.searchsorted(vals, est, side="left") / len(vals)
-    hi = np.searchsorted(vals, est, side="right") / len(vals)
-    assert (lo <= 0.5 <= hi) or min(abs(0.5 - lo), abs(0.5 - hi)) <= 0.02
+    assert _rank_err(vals, est, 0.5) <= 0.02
+
+
+def test_keyless_merge_explicit_delta(spark, events):
+    """An explicit delta on a keyless merge re-compresses digests built
+    at a finer delta: the output carries the new delta, fits its
+    centroid budget and stays within its rank bound."""
+    from tdigest_spark.operators.digest_agg import tdigest_merge_agg
+
+    leaf = tdigest_agg(events.repartition(4), "value", by=["event_type"], delta=LOSSLESS)
+    m = tdigest_merge_agg(leaf.drop("event_type"), delta=50)
+    row = m.collect()[0]["digest"]
+    assert row["delta"] == 50
+    assert len(row["means"]) <= 102
+    vals = np.sort(events.select("value").toPandas()["value"].to_numpy())
+    assert row["total_weight"] == len(vals)
+    est = tdigest_stats(m, {"p50": ("quantile", 0.5), "p90": ("quantile", 0.9)}).collect()[0]
+    assert _rank_err(vals, est["p50"], 0.5) <= 0.04
+    assert _rank_err(vals, est["p90"], 0.9) <= 0.04
 
 
 def test_sql_build_drops_nan_and_bad_weights(spark):

@@ -1,5 +1,5 @@
 """Web-pages pipeline tests: generator determinism, extraction
-invariant, skew-salted sketching, checkpoint/resume semantics."""
+invariant, skewed-key sketching, checkpoint/resume semantics."""
 
 import json
 import os
@@ -48,7 +48,7 @@ def test_lang_skew_present(pages):
 
 
 def test_sketch_webpages_stats_accuracy(spark, pages):
-    out = {r["lang"]: r for r in sketch_webpages(spark, pages, delta=100, salt=4).collect()}
+    out = {r["lang"]: r for r in sketch_webpages(spark, pages, delta=100).collect()}
     pdf = with_text_features(pages).select("lang", "n_chars").toPandas()
     for lang, g in pdf.groupby("lang"):
         v = np.sort(g["n_chars"].to_numpy())
@@ -91,7 +91,7 @@ def test_checkpoint_resume(spark, tmp_path):
     direct = {
         r["lang"]: r
         for r in sketch_webpages(
-            spark, synth_webpages(spark, 4_000), delta=1_000_000, salt=None
+            spark, synth_webpages(spark, 4_000), delta=1_000_000
         ).collect()
     }
     for lang in rows1:
