@@ -140,26 +140,62 @@ def test_nulls_dropped(spark):
     assert np.isnan(res.loc["b", "q"])
 
 
-def test_plan_shape_no_raw_shuffle(spark):
-    """Keyless build and merge over 32 input partitions: the plan ships
-    one partial per partition to a single-task reduce (one exchange,
-    no grouped pandas merge), the lossless global median is exact, and
-    the HLL estimate equals the one-partition build's."""
-    from tdigest_spark.operators.sketch_agg import sketch_build, sketch_estimates
-
-    src = spark.range(0, 10_000, 1, 32).select(
+def _high_partial_src(spark):
+    return spark.range(0, 10_000, 1, 32).select(
         (F.col("id") % 1000).cast("double").alias("v"),
         (F.col("id") % 5000).cast("string").alias("k"),
     )
-    dig = tdigest_agg(src, "v", delta=LOSSLESS)
+
+
+def test_plan_shape_no_raw_shuffle(spark):
+    """Keyless build over 32 input partitions: the plan ships one
+    partial per partition, built by the Python map below the exchange,
+    to a single-task reduce above it; raw rows never shuffle."""
+    dig = tdigest_agg(_high_partial_src(spark), "v", delta=LOSSLESS)
     plan = dig._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan, plan
     assert plan.count("MapInPandas") == 2, plan  # partial build + reduce
     assert plan.index("MapInPandas") < plan.index("Exchange") < plan.rindex("MapInPandas")
+
+
+def test_salted_equals_unsalted(spark, events):
+    """A caller-built two-level tree (partials per (key, bucket), then
+    a grouped tdigest_merge_agg) returns the same groups, exact weights
+    and bound-level-equal quantiles as the direct grouped build."""
+    from tdigest_spark.operators.digest_agg import tdigest_merge_agg
+
+    spec = {"q": ("quantile", 0.5), "n": ("total_weight",)}
+    a = tdigest_stats(
+        tdigest_agg(events, "value", by=["event_type"], delta=100), spec
+    ).toPandas().set_index("event_type").sort_index()
+    bucketed = events.withColumn("bucket", F.abs(F.hash("value")) % 4)
+    partial = tdigest_agg(bucketed, "value", by=["event_type", "bucket"], delta=100)
+    b = tdigest_stats(
+        tdigest_merge_agg(partial.drop("bucket"), by=["event_type"], delta=100), spec
+    ).toPandas().set_index("event_type").sort_index()
+    assert list(a.index) == list(b.index)
+    np.testing.assert_allclose(a["n"], b["n"], rtol=0)  # weight conservation exact
+    np.testing.assert_allclose(a["q"], b["q"], rtol=0.05)
+
+
+def test_global_merge_auto_salts_at_high_partial_count(spark):
+    """At a high partial count (32 partitions) the global digest is
+    still one direct reduce — no salted intermediate merge level — and
+    the lossless median and count are exact."""
+    dig = tdigest_agg(_high_partial_src(spark), "v", delta=LOSSLESS)
+    plan = dig._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
     out = tdigest_stats(dig, {"p50": ("quantile", 0.5), "n": ("total_weight",)}).collect()[0]
     assert out["p50"] == 499.5
     assert out["n"] == 10_000
 
+
+def test_sketch_global_merge_auto_two_level(spark):
+    """The companion-sketch global reduce over 32 partials is two
+    levels (partial build, one reduce) with no grouped pandas merge,
+    and its HLL estimate equals the one-partition build's."""
+    from tdigest_spark.operators.sketch_agg import sketch_build, sketch_estimates
+
+    src = _high_partial_src(spark)
     built = sketch_build(src, {"h": ("hll", "k")})
     plan = built._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan, plan
