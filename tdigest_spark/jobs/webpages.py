@@ -37,6 +37,7 @@ from tdigest_spark.operators.digest_agg import (
     tdigest_merge_agg,
     tdigest_stats,
 )
+from tdigest_spark.operators.sketch_agg import sketch_build, sketch_estimates
 from tdigest_spark.sources.catalog import read_table, write_table
 from tdigest_spark.sources.webpages import synth_webpages
 
@@ -55,84 +56,25 @@ def sketch_webpages(
     delta: int = 200,
 ) -> DataFrame:
     """ONE pass over pages -> per-lang t-digest of text length + HLL of
-    urls, fused into a single partial stage (at 100 TB the scan
-    dominates; every extra pass doubles it), then one per-lang merge of
-    the digest and HLL partials together.
+    urls: one :func:`sketch_build` with the ``"td"`` and ``"hll"`` kinds
+    (both sketches fill in the same partial stage — at 100 TB the scan
+    dominates and every extra pass doubles it; one per-lang blob merge
+    follows), then :func:`sketch_estimates` for the ``STAT_SPEC``
+    columns plus ``distinct_urls_est``.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tdigest_spark.operators.digest_agg import DIGEST_TYPE, _merge_rows
-    from tdigest_spark.sketch.hll import HLL
-    from tdigest_spark.sketch.tdigest import TDigest
-
     feats = with_text_features(pages).select("lang", "url", "n_chars")
-
-    part_schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("digest", DIGEST_TYPE),
-            T.StructField("hll", T.BinaryType()),
-        ]
+    built = sketch_build(
+        feats,
+        {"digest": ("td", "n_chars", delta), "hll": ("hll", "url", 12)},
+        by=["lang"],
     )
-
-    def build_partials(batches):
-        digs: dict[str, TDigest] = {}
-        hlls: dict[str, HLL] = {}
-        for pdf in batches:
-            for lang, g in pdf.groupby("lang", sort=False, dropna=False):
-                d = TDigest.from_values(g["n_chars"].to_numpy(), delta)
-                digs[lang] = digs[lang].merge(d) if lang in digs else d
-                hlls.setdefault(lang, HLL(12)).add(g["url"])
-        if digs:
-            yield pd.DataFrame(
-                {
-                    "lang": list(digs),
-                    # compress to working delta before the shuffle (same
-                    # rationale as digest_agg.build_partials: ~16x
-                    # smaller wire size, better chain accuracy)
-                    "digest": [d.ship_compressed().to_row() for d in digs.values()],
-                    "hll": [hlls[k].to_bytes() for k in digs],
-                }
-            )
-
-    partials = feats.mapInPandas(build_partials, part_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = HLL.from_bytes(bytes(pdf["hll"].iloc[0]))
-        for b in pdf["hll"].iloc[1:]:
-            h = h.merge(HLL.from_bytes(bytes(b)))
-        return pd.DataFrame(
-            {
-                "lang": [pdf["lang"].iloc[0]],
-                "digest": [_merge_rows(list(pdf["digest"]))],
-                "hll": [h.to_bytes()],
-            }
-        )
-
-    merged = partials.groupBy("lang").applyInPandas(merge_group, part_schema)
-
-    stat_schema = T.StructType(
-        [T.StructField("lang", T.StringType())]
-        + [T.StructField(c, T.DoubleType()) for c in STAT_SPEC]
-        + [T.StructField("distinct_urls_est", T.DoubleType())]
-    )
-
-    def finalize(batches):
-        from tdigest_spark.operators.digest_agg import _eval_stat
-
-        for pdf in batches:
-            out = {"lang": pdf["lang"]}
-            digs = [TDigest.from_row(r) for r in pdf["digest"]]
-            for name, (stat, *args) in STAT_SPEC.items():
-                out[name] = [_eval_stat(d, stat, tuple(args)) for d in digs]
-            out["distinct_urls_est"] = [
-                HLL.from_bytes(bytes(b)).estimate() for b in pdf["hll"]
-            ]
-            yield pd.DataFrame(out)
-
+    ests = {
+        name: (f"td_{stat}", "digest", *args)
+        for name, (stat, *args) in STAT_SPEC.items()
+    }
+    ests["distinct_urls_est"] = ("hll_estimate", "hll")
     return (
-        merged.mapInPandas(finalize, stat_schema)
+        sketch_estimates(built, ests)
         .withColumn("n_docs", F.col("n_docs").cast("long"))
         .withColumn("distinct_urls_est", F.round("distinct_urls_est", 1))
     )

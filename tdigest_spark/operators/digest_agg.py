@@ -72,20 +72,17 @@ def _merge_digests(rows: Iterable, delta: int | None = None) -> TDigest:
     return TDigest.merge_all(ds)
 
 
-def _merge_rows(rows: Iterable, delta: int | None = None) -> dict:
-    """Final-level merge: greedy merge, then compress to the public delta."""
-    return _merge_digests(rows, delta).compressed().to_row()
-
-
 def _reduce_keyless(
     partials: DataFrame, digest_col: str, delta: int | None = None
 ) -> DataFrame:
     """The keyless final level: every partial digest goes to one task,
-    which merges them greedily into the single output row."""
+    which merges them greedily into the single output row, compressed
+    to the public delta."""
 
     def reduce(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = (r for pdf in it for r in pdf[digest_col])
-        yield pd.DataFrame({digest_col: [_merge_rows(rows, delta)]})
+        merged = _merge_digests(rows, delta).compressed()
+        yield pd.DataFrame({digest_col: [merged.to_row()]})
 
     return partials.repartition(1).mapInPandas(
         reduce, T.StructType([T.StructField(digest_col, DIGEST_TYPE, True)])
@@ -543,30 +540,59 @@ def _digest_blob_table(digests: DataFrame, by: list, digest_col: str) -> DataFra
     return digests.select(*by, digest_col).mapInPandas(conv, out_schema)
 
 
-def _score_joined(
+def _score_by_group(
     rows: DataFrame,
     digests: DataFrame,
+    head: list | None,
     by: list,
     digest_col: str,
     out_col: str,
     make_scorer,
 ) -> DataFrame:
-    """Shuffle-join scoring path (the above-regime form): the digest
-    table is blob-compacted distributedly, null-safe-joined onto the
-    rows (one shuffle of the rows by the group keys; AQE may split
-    skewed keys since no downstream grouping exists), and scored by one
-    mapInPandas whose per-task digest cache decodes each group's blob
-    once. ``make_scorer()`` returns ``f(digest, values) -> ndarray``
-    given the decoded TDigest."""
+    """The per-row scoring loop behind :func:`with_percentile_rank` and
+    :func:`quantile_normalize`: one mapInPandas groups each Arrow batch
+    by the rows' keys, decodes each group's digest blob once per task
+    and scores the group's values; rows of a digest-less group get
+    NULL. ``make_scorer()`` returns an object with ``values(pdf)`` and
+    ``score(digest, values) -> ndarray`` (:class:`_CdfScorer`).
+
+    The blobs reach the loop one of two ways. ``head`` (the full digest
+    table, the in-regime form): compacted on the driver into ONE
+    broadcast dict, and the rows are scored in place — never shuffled
+    or joined. ``head=None`` (the above-regime form): the digest table
+    is blob-compacted distributedly and null-safe-joined onto the rows
+    (one shuffle of the rows by the group keys; AQE may split skewed
+    keys since no downstream grouping exists), so no executor ever
+    materializes the whole table."""
     import numpy as np
 
-    blobs = _digest_blob_table(digests, by, digest_col)
-    cond = None
-    for c in by:
-        clause = rows[c].eqNullSafe(blobs[f"__k_{c}"])
-        cond = clause if cond is None else cond & clause
-    joined = rows.join(blobs, cond, "left")
-    orig_cols = [f.name for f in rows.schema.fields]
+    if head is None:
+        blobs = _digest_blob_table(digests, by, digest_col)
+        cond = None
+        for c in by:
+            clause = rows[c].eqNullSafe(blobs[f"__k_{c}"])
+            cond = clause if cond is None else cond & clause
+        scored = rows.join(blobs, cond, "left")
+
+        def blob_of(pdf: pd.DataFrame, key: tuple, idx):
+            return pdf["__blob"].iloc[idx[0]]
+
+    else:
+        bc = rows.sparkSession.sparkContext.broadcast(
+            {
+                _null_nan_key(tuple(r[c] for c in by)): TDigest.from_row(
+                    r[digest_col].asDict()
+                ).to_bytes()
+                for r in head
+                if r[digest_col] is not None
+            }
+        )
+        scored = rows
+
+        def blob_of(pdf: pd.DataFrame, key: tuple, idx):
+            return bc.value.get(key)
+
+    extra = [c for c in scored.columns if c not in rows.columns]
     out_schema = T.StructType(
         list(rows.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
     )
@@ -575,18 +601,21 @@ def _score_joined(
         scorer = make_scorer()
         cache: dict[tuple, TDigest] = {}
         for pdf in batches:
-            out = pdf[orig_cols].copy()
+            out = pdf.drop(columns=extra) if extra else pdf.copy()
             res = np.full(len(pdf), np.nan)
             vals = scorer.values(pdf)
             # group by the ROWS' OWN keys, not the joined __k_ columns:
             # a digest-less group's __k_ values are NULL (left-join
             # miss) and would collide with the genuine NULL-key group
-            groups = pdf.groupby(by, sort=False, dropna=False).indices
+            if by:
+                groups = pdf.groupby(by, sort=False, dropna=False).indices
+            else:
+                groups = {(): np.arange(len(pdf))}
             for gk, idx in groups.items():
                 key = _null_nan_key(gk if isinstance(gk, tuple) else (gk,))
                 dig = cache.get(key)
                 if dig is None:
-                    blob = pdf["__blob"].iloc[idx[0]]
+                    blob = blob_of(pdf, key, idx)
                     if blob is None or (isinstance(blob, float) and blob != blob):
                         continue
                     dig = cache.setdefault(key, TDigest.from_bytes(bytes(blob)))
@@ -594,7 +623,7 @@ def _score_joined(
             out[out_col] = res
             yield out
 
-    return joined.mapInPandas(score, out_schema)
+    return scored.mapInPandas(score, out_schema)
 
 
 class _CdfScorer:
@@ -642,56 +671,19 @@ def with_percentile_rank(
     ~3 KB/group at delta=200, fine to ~1e5 groups
     (``max_broadcast_groups``). A head(limit+1) probe counts the digest
     table; above the limit the scorer switches to the shuffle-join form
-    (:func:`_score_joined`): digest blobs stay distributed, the rows
+    (:func:`_score_by_group`): digest blobs stay distributed, the rows
     shuffle ONCE by the group keys, and no executor ever materializes
     the whole digest table. Identical output either way (tested with a
     forced low threshold).
     """
-    import numpy as np
-
     by = list(by)
     head = _digest_head(digests, by, digest_col, max_broadcast_groups)
-    if head is None:
-        if not by:
-            raise AssertionError("keyless digest table cannot exceed one row")
-        return _score_joined(
-            rows, digests, by, digest_col, out_col,
-            lambda: _CdfScorer(value_col),
-        )
-    blobs: dict[tuple, bytes] = {}
-    for r in head:
-        if r[digest_col] is None:
-            continue
-        key = _null_nan_key(tuple(r[c] for c in by))
-        blobs[key] = TDigest.from_row(r[digest_col].asDict()).to_bytes()
-    bc = rows.sparkSession.sparkContext.broadcast(blobs)
-    out_schema = T.StructType(
-        list(rows.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
+    if head is None and not by:
+        raise AssertionError("keyless digest table cannot exceed one row")
+    return _score_by_group(
+        rows, digests, head, by, digest_col, out_col,
+        lambda: _CdfScorer(value_col),
     )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[tuple, TDigest] = {}
-        for pdf in batches:
-            out = pdf.copy()
-            res = np.full(len(pdf), np.nan)
-            vals = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if by:
-                groups = pdf.groupby(by, sort=False, dropna=False).indices
-            else:
-                groups = {(): np.arange(len(pdf))}
-            for gk, idx in groups.items():
-                key = _null_nan_key(gk if isinstance(gk, tuple) else (gk,))
-                blob = bc.value.get(key)
-                if blob is None:
-                    continue
-                dig = cache.get(key)
-                if dig is None:
-                    dig = cache.setdefault(key, TDigest.from_bytes(blob))
-                res[idx] = dig.cdf_many(vals[idx])
-            out[out_col] = res
-            yield out
-
-    return rows.mapInPandas(score, out_schema)
 
 
 def quantile_normalize(
@@ -716,14 +708,13 @@ def quantile_normalize(
     ALL rows — normalize every group onto the pooled distribution);
     ``group_digests`` defaults to per-``by`` digests built from
     ``rows``. Same scale shape AND auto-routing as
-    :func:`with_percentile_rank`: below ``max_broadcast_groups`` both
-    digest tables are collected once and broadcast as blobs and the
+    :func:`with_percentile_rank`: below ``max_broadcast_groups`` the
+    group digests are collected once and broadcast as blobs and the
     rows are scored in place (never shuffled); above it the group
     digests stay distributed and the rows shuffle once through the
-    null-safe join form (the one-row reference is always broadcast).
-    NULL/NaN values, and rows whose group has no digest, get NULL."""
-    import numpy as np
-
+    null-safe join form. Either way the one-row reference ships whole
+    to every task as a blob inside the scorer. NULL/NaN values, and
+    rows whose group has no digest, get NULL."""
     by = list(by)
     if not by:
         raise ValueError("quantile_normalize needs group keys (else it is identity)")
@@ -736,43 +727,10 @@ def quantile_normalize(
         raise ValueError("reference must be a one-row digest table")
     ref_blob = TDigest.from_row(ref_rows[0][digest_col].asDict()).to_bytes()
     head = _digest_head(group_digests, by, digest_col, max_broadcast_groups)
-    if head is None:
-        return _score_joined(
-            rows, group_digests, by, digest_col, out_col,
-            lambda: _CdfScorer(value_col, ref_blob),
-        )
-    blobs: dict[tuple, bytes] = {}
-    for r in head:
-        if r[digest_col] is not None:
-            key = _null_nan_key(tuple(r[c] for c in by))
-            blobs[key] = TDigest.from_row(r[digest_col].asDict()).to_bytes()
-    bc = rows.sparkSession.sparkContext.broadcast((blobs, ref_blob))
-    out_schema = T.StructType(
-        list(rows.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
+    return _score_by_group(
+        rows, group_digests, head, by, digest_col, out_col,
+        lambda: _CdfScorer(value_col, ref_blob),
     )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        group_blobs, rblob = bc.value
-        ref = TDigest.from_bytes(rblob)
-        cache: dict[tuple, TDigest] = {}
-        for pdf in batches:
-            out = pdf.copy()
-            res = np.full(len(pdf), np.nan)
-            vals = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            groups = pdf.groupby(by, sort=False, dropna=False).indices
-            for gk, idx in groups.items():
-                key = _null_nan_key(gk if isinstance(gk, tuple) else (gk,))
-                blob = group_blobs.get(key)
-                if blob is None:
-                    continue
-                dig = cache.get(key)
-                if dig is None:
-                    dig = cache.setdefault(key, TDigest.from_bytes(blob))
-                res[idx] = ref.quantiles(dig.cdf_many(vals[idx]))
-            out[out_col] = res
-            yield out
-
-    return rows.mapInPandas(score, out_schema)
 
 
 def filter_percentile_range(

@@ -93,33 +93,13 @@ def fd_merge_agg(
 ) -> DataFrame:
     """Merge existing FD blob columns per group (rollups over
     checkpointed sketch tables — same role as ``sketch_merge_agg``)."""
+    from .sketch_agg import _final_merge
+
     by = list(by)
     out_schema = _schema or T.StructType(
         [df.schema[c] for c in by] + [T.StructField(blob_col, T.BinaryType(), True)]
     )
-
-    def merge_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf[blob_col]:
-            if b is None:  # nullable checkpoint column: skip NULL blobs
-                continue
-            obj = FrequentDirections.from_bytes(bytes(b))
-            acc = obj if acc is None else acc.merge(obj)
-        out = {c: [pdf[c].iloc[0]] for c in by}
-        out[blob_col] = [None if acc is None else acc.to_bytes()]
-        return pd.DataFrame(out)
-
-    if by:
-        return df.groupBy(*by).applyInPandas(merge_pdf, out_schema)
-
-    def merge_global(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if chunks:
-            yield merge_pdf(pd.concat(chunks, ignore_index=True))
-
-    from .sketch_agg import _global_reduce
-
-    return _global_reduce(df, merge_global, out_schema)
+    return _final_merge(df.select(*by, blob_col), {blob_col: "fd"}, by, out_schema)
 
 
 def fd_stats(

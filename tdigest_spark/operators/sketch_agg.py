@@ -181,7 +181,7 @@ class _TDigestKind(_Kind):
     fusion); this kind exists for SCAN FUSION — rank sketches and
     companion sketches built in the same pass over the table (at
     100 TB every extra pass doubles the job; ``jobs/webpages.py``
-    hand-rolled exactly this composition before). Blobs use the
+    builds its per-lang digest + HLL through this kind). Blobs use the
     compact ``TDigest.to_bytes`` codec; query them with the ``td_*``
     estimate functions or rebuild via ``TDigest.from_bytes``."""
 
@@ -273,7 +273,9 @@ def sketch_build(
 
     Kinds / params: ``("hll", col, p=12)``, ``("bloom", col,
     n_bits=1<<20, n_hashes=7)``, ``("cms", col, eps=0.001,
-    delta=0.01)``, ``("kll", col, k=200)``.
+    delta=0.01)``, ``("kll", col, k=200)``, ``("kll_w", col,
+    weight_col, k=200)``, ``("kmv", col, k=256)``, ``("td", col,
+    delta=200)``, ``("fd", vec_col, ell, d)``.
 
     ``strategy`` (same regime split as ``tdigest_agg``'s
     ``build_engine``): ``"partials"`` (default) does map-side partial
@@ -381,32 +383,42 @@ def sketch_build(
         raise ValueError(f"unknown sketch_build strategy {strategy!r}")
 
     partials = src.mapInPandas(build_partials, out_schema)
+    kinds = {name: kind for name, (kind, _col, _p) in specs.items()}
+    return _final_merge(partials, kinds, by, out_schema)
 
-    def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _final_merge(
+    partials: DataFrame, kinds: dict[str, str], by: list, out_schema
+) -> DataFrame:
+    """The final level shared by :func:`sketch_build`,
+    :func:`sketch_merge_agg` and ``fd_agg.fd_merge_agg``: one merged
+    blob per column per group — ``groupBy(by).applyInPandas`` when
+    grouped, one single-task ``mapInPandas`` reduce when keyless. NULL
+    blobs (nullable checkpoint columns) are skipped; a group with no
+    blob left merges to NULL."""
+
+    def final(pdf: pd.DataFrame) -> pd.DataFrame:
         out = {c: [pdf[c].iloc[0]] for c in by}
-        for name, (kind, _col, _p) in specs.items():
-            objs = [_CLS[kind].from_bytes(bytes(b)) for b in pdf[name]]
-            acc = objs[0]
-            for o in objs[1:]:
-                acc = acc.merge(o)
-            out[name] = [KINDS[kind].ship(acc).to_bytes()]
+        for c, kind in kinds.items():
+            acc = None
+            for b in pdf[c]:
+                if b is not None:
+                    obj = _CLS[kind].from_bytes(bytes(b))
+                    acc = obj if acc is None else acc.merge(obj)
+            out[c] = [None if acc is None else KINDS[kind].ship(acc).to_bytes()]
         return pd.DataFrame(out)
 
     if by:
-        return partials.groupBy(*by).applyInPandas(merge_partials, out_schema)
+        return partials.groupBy(*by).applyInPandas(final, out_schema)
 
-    def merge_global(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def final_global(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = [pdf for pdf in batches if len(pdf)]
         if chunks:
-            yield merge_partials(pd.concat(chunks, ignore_index=True))
+            yield final(pd.concat(chunks, ignore_index=True))
 
-    return _global_reduce(partials, merge_global, out_schema)
-
-
-def _global_reduce(partials: DataFrame, merge_fn, out_schema) -> DataFrame:
-    """Single-row global reduce: the partials (already one per input
-    partition after the partition-local combine) go to one task."""
-    return partials.repartition(1).mapInPandas(merge_fn, out_schema)
+    # the partials (already one per input partition after the
+    # partition-local combine) go to one task
+    return partials.repartition(1).mapInPandas(final_global, out_schema)
 
 
 def sketch_merge_agg(
@@ -437,13 +449,6 @@ def sketch_merge_agg(
         [src.schema[c] for c in by]
         + [T.StructField(c, T.BinaryType(), True) for c in cols]
     )
-
-    def _merge_col(kind: str, blobs) -> bytes:
-        objs = [_CLS[kind].from_bytes(bytes(b)) for b in blobs]
-        acc = objs[0]
-        for o in objs[1:]:
-            acc = acc.merge(o)
-        return KINDS[kind].ship(acc).to_bytes()
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # accumulators hold LIVE sketch objects, serialized once at
@@ -486,23 +491,7 @@ def sketch_merge_agg(
     if strategy != "partials":
         raise ValueError(f"unknown sketch_merge_agg strategy {strategy!r}")
 
-    partials = src.mapInPandas(partial, out_schema)
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {c: [pdf[c].iloc[0]] for c in by}
-        for c in cols:
-            out[c] = [_merge_col(kinds[c], list(pdf[c]))]
-        return pd.DataFrame(out)
-
-    if by:
-        return partials.groupBy(*by).applyInPandas(final, out_schema)
-
-    def final_global(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if chunks:
-            yield final(pd.concat(chunks, ignore_index=True))
-
-    return _global_reduce(partials, final_global, out_schema)
+    return _final_merge(src.mapInPandas(partial, out_schema), kinds, by, out_schema)
 
 
 def sketch_sliding(

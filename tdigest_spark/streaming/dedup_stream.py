@@ -30,7 +30,7 @@ from tdigest_spark.sketch.bloom import BloomFilter
 
 __all__ = ["streaming_bloom_dedup"]
 
-_STATE_SCHEMA = T.StructType([T.StructField("bloom", T.BinaryType())])
+_BLOOM_STATE_TYPE = T.StructType([T.StructField("bloom", T.BinaryType())])
 _BUCKET = "__dd_bucket"
 
 
@@ -83,7 +83,7 @@ def streaming_bloom_dedup(
     return bucketed.groupBy(_BUCKET).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
+        stateStructType=_BLOOM_STATE_TYPE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

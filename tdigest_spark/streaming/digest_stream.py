@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from tdigest_spark.operators.digest_agg import DIGEST_TYPE
 from tdigest_spark.sketch.tdigest import TDigest
 from tdigest_spark.streaming._batch import drain_batch
 
@@ -49,18 +50,28 @@ __all__ = [
     "sketch_sink",
 ]
 
-# state = flattened digest (arrays + scalars); GroupState rows are
-# plain tuples in schema field order
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("means", T.ArrayType(T.DoubleType())),
-        T.StructField("weights", T.ArrayType(T.DoubleType())),
-        T.StructField("total_weight", T.DoubleType()),
-        T.StructField("vmin", T.DoubleType()),
-        T.StructField("vmax", T.DoubleType()),
-        T.StructField("delta", T.IntegerType()),
-    ]
-)
+def _load_digest(state: GroupState, delta: int) -> TDigest:
+    """Decode the digest held in ``state`` — GroupState rows are plain
+    tuples in ``DIGEST_TYPE`` field order — or a fresh empty one."""
+    if not state.exists:
+        return TDigest.empty(delta)
+    return TDigest.from_row(dict(zip(DIGEST_TYPE.fieldNames(), state.get)))
+
+
+def _store_digest(state: GroupState, dig: TDigest) -> None:
+    """Encode ``dig`` into ``state`` as a ``DIGEST_TYPE``-ordered tuple
+    of plain Python values (lists, not numpy arrays, for the state
+    serializer)."""
+    state.update(
+        (
+            dig.means.tolist(),
+            dig.weights.tolist(),
+            float(dig.total_weight),
+            float(dig.vmin),
+            float(dig.vmax),
+            int(dig.delta),
+        )
+    )
 
 
 def stateful_digest_stream(
@@ -88,33 +99,11 @@ def stateful_digest_stream(
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            means, weights, tw, vmin, vmax, d0 = state.get
-            dig = TDigest.from_row(
-                {
-                    "means": list(means),
-                    "weights": list(weights),
-                    "total_weight": tw,
-                    "vmin": vmin,
-                    "vmax": vmax,
-                    "delta": d0,
-                }
-            )
-        else:
-            dig = TDigest.empty(delta)
+        dig = _load_digest(state, delta)
         for pdf in pdfs:
             dig = dig.add_values(pdf[value_col].to_numpy())
         dig = dig.compressed()
-        state.update(
-            (
-                dig.means.tolist(),
-                dig.weights.tolist(),
-                float(dig.total_weight),
-                float(dig.vmin),
-                float(dig.vmax),
-                int(dig.delta),
-            )
-        )
+        _store_digest(state, dig)
         row = {c: [k] for c, k in zip(by, key)}
         row["n_values"] = [int(dig.total_weight)]
         for q in quantiles:
@@ -124,7 +113,7 @@ def stateful_digest_stream(
     return stream.groupBy(*by).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
+        stateStructType=DIGEST_TYPE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -168,8 +157,6 @@ def windowed_digest_stream(
     """
     if emit not in ("stats", "digest"):
         raise ValueError(f"windowed_digest_stream: unknown emit mode {emit!r}")
-    from tdigest_spark.operators.digest_agg import DIGEST_TYPE
-
     by = list(by)
     src = stream.withWatermark(ts_col, watermark)
     # the window struct carries the watermark tag — it must survive to
@@ -219,36 +206,15 @@ def windowed_digest_stream(
 
         if state.hasTimedOut:
             # watermark passed window end: fire final result, evict
-            means, weights, tw, vmin, vmax, d0 = state.get
-            dig = TDigest.from_row(
-                {
-                    "means": list(means), "weights": list(weights),
-                    "total_weight": tw, "vmin": vmin, "vmax": vmax, "delta": d0,
-                }
-            )
+            dig = _load_digest(state, delta)
             state.remove()
             yield emit_row(dig, final=True)
             return
-        if state.exists:
-            means, weights, tw, vmin, vmax, d0 = state.get
-            dig = TDigest.from_row(
-                {
-                    "means": list(means), "weights": list(weights),
-                    "total_weight": tw, "vmin": vmin, "vmax": vmax, "delta": d0,
-                }
-            )
-        else:
-            dig = TDigest.empty(delta)
+        dig = _load_digest(state, delta)
         for pdf in pdfs:
             dig = dig.add_values(pdf[value_col].to_numpy())
         dig = dig.compressed()
-        state.update(
-            (
-                dig.means.tolist(), dig.weights.tolist(),
-                float(dig.total_weight), float(dig.vmin), float(dig.vmax),
-                int(dig.delta),
-            )
-        )
+        _store_digest(state, dig)
         # evict when the watermark passes the end of this window; key
         # timestamps are naive UTC wall time (session tz is UTC), and
         # the timeout must lie strictly past the current watermark
@@ -259,7 +225,7 @@ def windowed_digest_stream(
     return keyed.groupBy("__w", *by).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
+        stateStructType=DIGEST_TYPE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

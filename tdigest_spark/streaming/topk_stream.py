@@ -31,7 +31,7 @@ from tdigest_spark.operators.topk import _MG_CAP_FACTOR, _mg_add_batch
 
 __all__ = ["stateful_topk_stream"]
 
-_STATE_SCHEMA = T.StructType(
+_MG_STATE_TYPE = T.StructType(
     [
         T.StructField("keys", T.ArrayType(T.StringType())),
         T.StructField("counts", T.ArrayType(T.LongType())),
@@ -110,7 +110,7 @@ def stateful_topk_stream(
     return src.groupBy(*by).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
+        stateStructType=_MG_STATE_TYPE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -61,6 +61,30 @@ def test_sketch_webpages_stats_accuracy(spark, pages):
         assert abs(r["distinct_urls_est"] / len(v) - 1) < 0.05
 
 
+def test_sketch_webpages_is_one_pass(spark):
+    """The job exists for its single scan: one Range leaf feeds one
+    partial-build stage, one per-lang merge and one estimate stage."""
+    out = sketch_webpages(spark, synth_webpages(spark, N))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Range (") == 1
+    assert plan.count("MapInPandas") == 2
+    assert plan.count("FlatMapGroupsInPandas") == 1
+
+
+def test_sketch_webpages_hll_equals_core(spark, pages):
+    """Both builds hash with the same hash64 and HLL merge is a register
+    max, so each lang's estimate equals the driver-side core sketch's."""
+    from tdigest_spark.sketch.hll import HLL
+
+    out = {r["lang"]: r["distinct_urls_est"] for r in sketch_webpages(spark, pages).collect()}
+    pdf = pages.select("lang", "url").toPandas()
+    want = {
+        lang: round(HLL(12).add(g["url"]).estimate(), 1)
+        for lang, g in pdf.groupby("lang")
+    }
+    assert out == want
+
+
 def test_checkpoint_resume(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out1 = run_checkpointed(spark, 4_000, ckpt, "job1", n_buckets=4, delta=1_000_000)
