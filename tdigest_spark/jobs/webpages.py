@@ -131,8 +131,12 @@ def run_checkpointed(
             "path": part_path,
             "format": fmt,
         }
-        with open(manifest_path, "w") as f:
+        # write-temp + os.replace: a crash mid-write leaves the previous
+        # manifest whole, never truncated JSON the resume cannot parse
+        tmp = manifest_path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
+        os.replace(tmp, manifest_path)
 
     # read each bucket with the format its WRITER recorded in the
     # manifest (a resume session whose iceberg availability differs

@@ -372,21 +372,6 @@ def tdigest_agg_sql(
 # query/stat extraction over digest rows
 # ---------------------------------------------------------------------------
 
-_STAT_ARITY = {
-    "quantile": 1,
-    "median": 0,
-    "icdf": 1,
-    "cdf": 1,
-    "mean": 0,
-    "variance": 0,
-    "stddev": 0,
-    "trimmed_mean": 2,
-    "total_weight": 0,
-    "vmin": 0,
-    "vmax": 0,
-    "size": 0,
-}
-
 
 def _eval_stat(d: TDigest, stat: str, args: tuple):
     if stat == "total_weight":

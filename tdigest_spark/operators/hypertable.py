@@ -8,14 +8,15 @@ windows (day -> week -> month) are answered by MERGING bucket digests,
 never by rescanning raw data: the same mergeability that powers the
 partial/final aggregate powers the rollup lattice.
 
-Storage/commit protocol is the streaming ``digest_sink``'s
-snapshot-pointer table (one atomic symlink swap carries data + the
-last-ingest marker), so batch ingests get the same crash safety and
-replay idempotence without a streaming checkpoint:
+Storage/commit protocol is the snapshot-table protocol of
+``streaming._batch`` that ``digest_sink`` and ``sketch_sink`` also use
+(one atomic symlink swap carries data + the last-ingest marker): every
+upsert, downsample and sink here is a ``snapshot_upsert`` that supplies
+only its build and its merge, so batch ingests get the same crash
+safety and replay idempotence without a streaming checkpoint:
 
-- ``hypertable_upsert`` — digest the new rows per (bucket, keys),
-  semi/anti-split the existing table so ONLY touched buckets pay the
-  merge, commit a new snapshot. Re-running an ingest id is a no-op.
+- ``hypertable_upsert`` — digest the new rows per (bucket, keys); only
+  touched buckets pay the merge. Re-running an ingest id is a no-op.
 - ``hypertable_window_stats`` — stats over any window that is a
   multiple of the bucket: merge O(window/bucket) digest rows per
   output row, all from the rollup table.
@@ -60,11 +61,10 @@ from tdigest_spark.operators.digest_agg import (
     tdigest_merge_agg,
     tdigest_stats,
 )
-from tdigest_spark.streaming.digest_stream import (
-    _commit_snapshot,
-    _current_snapshot_rev,
-    _last_committed_batch,
-    _split_touched,
+from tdigest_spark.streaming._batch import (
+    snapshot_sink,
+    snapshot_upsert,
+    snapshot_version,
 )
 
 __all__ = [
@@ -127,15 +127,22 @@ def _nullsafe_inner(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> D
     return left.join(right, cond, "inner").drop(*[f"_r_{c}" for c in keys])
 
 
-def _merge_with_widths(union: DataFrame, keys: list[str], merge_fn) -> DataFrame:
-    """Merge sketch rows per key group (``merge_fn(df, keys)`` — digest
-    or companion-sketch engine) and carry the coarsest contributing
-    ``bucket_sec`` (late data merged into an already-coarsened bucket
-    keeps that bucket's width — the sketch union still covers every raw
-    row exactly once, so window stats stay correct)."""
-    merged = merge_fn(union.drop("bucket_sec"), keys)
-    widths = union.groupBy(*keys).agg(F.max("bucket_sec").alias("bucket_sec"))
-    return _nullsafe_inner(merged, widths, keys)
+def _width_carry(merge_fn):
+    """Wrap the per-group merge ``merge_fn(df, keys)`` (digest or
+    companion-sketch engine) so that, on a downsampled table, each
+    merged row carries the coarsest contributing ``bucket_sec`` (late
+    data merged into an already-coarsened bucket keeps that bucket's
+    width — the sketch union still covers every raw row exactly once,
+    so window stats stay correct)."""
+
+    def merge(union: DataFrame, keys: list[str]) -> DataFrame:
+        if "bucket_sec" not in union.columns:
+            return merge_fn(union, keys)
+        merged = merge_fn(union.drop("bucket_sec"), keys)
+        widths = union.groupBy(*keys).agg(F.max("bucket_sec").alias("bucket_sec"))
+        return _nullsafe_inner(merged, widths, keys)
+
+    return merge
 
 
 def _downsample_core(
@@ -189,24 +196,8 @@ def _downsample_core(
                 f"previous width {prev_w})"
             )
         prev_w = width
-    last = _last_committed_batch(table_dir)
-    if last is None:
+    if snapshot_version(table_dir) is None:
         raise ValueError(f"hypertable_downsample: no table at {table_dir!r}")
-    rev = 0
-    if not bump_id:
-        if ingest_id is not None:
-            raise ValueError("ingest_id and bump_id=False are mutually exclusive")
-        # re-commit at the CURRENT id as a fresh REVISION directory:
-        # the merge below lazily reads the live snapshot through the
-        # pointer, so the output must land under a new path (and the
-        # pointer swap stays atomic)
-        ingest_id = last
-        rev = _current_snapshot_rev(table_dir) + 1
-    else:
-        if ingest_id is None:
-            ingest_id = last + 1
-        if ingest_id <= last:
-            return None
     now = _epoch(as_of)
 
     t = spark.read.parquet(table_dir)
@@ -251,15 +242,15 @@ def _downsample_core(
     )
     # only key groups a changed row lands on pay the merge (a re-run
     # can fold newly-old base rows into an existing coarse row)
-    group_keys = ["bucket_start", *keys]
-    changed = changed.localCheckpoint(eager=True)
-    ks = changed.select(*group_keys).distinct()
-    touched, untouched = _split_touched(unchanged, ks, group_keys)
-    merged = _merge_with_widths(
-        touched.unionByName(changed.select(*touched.columns)), group_keys, merge_fn
-    ).unionByName(untouched)
-    _commit_snapshot(merged.select(*untouched.columns), table_dir, ingest_id, rev=rev)
-    return ingest_id
+    return snapshot_upsert(
+        spark,
+        table_dir,
+        ["bucket_start", *keys],
+        lambda old: (unchanged, changed),
+        _width_carry(merge_fn),
+        ingest_id=ingest_id,
+        bump_id=bump_id,
+    )
 
 
 def hypertable_downsample(
@@ -361,59 +352,51 @@ def hypertable_upsert(
     """Merge one batch of raw rows into the rollup table. Returns the
     committed ingest id, or None if ``ingest_id`` was already merged
     (replay no-op). Rows with NULL timestamps are skipped (no bucket)."""
-    by = list(by)
+    return _bucket_upsert(
+        rows,
+        ts_col,
+        bucket_sec,
+        table_dir,
+        by,
+        ingest_id,
+        build=lambda df, keys: tdigest_agg(df, value_col, by=keys, delta=delta),
+        merge_fn=lambda df, keys: tdigest_merge_agg(df, by=keys),
+    )
+
+
+def _bucket_upsert(
+    rows: DataFrame,
+    ts_col: str,
+    bucket_sec: int,
+    table_dir: str,
+    by: Sequence[str],
+    ingest_id: int | None,
+    build,
+    merge_fn,
+) -> int | None:
+    """Shared upsert body: bucket the rows, ``build(df, keys)`` one
+    sketch row per (bucket, keys), and fold them into the table with
+    the width-carrying ``merge_fn``."""
     keys = ["bucket_start", *by]
-    last = _last_committed_batch(table_dir)
-    if ingest_id is None:
-        ingest_id = 0 if last is None else last + 1
-    if last is not None and ingest_id <= last:
-        return None
-    spark = rows.sparkSession
     bucketed = rows.withColumn("bucket_start", time_bucket(ts_col, bucket_sec)).filter(
         F.col("bucket_start").isNotNull()
     )
-    new = tdigest_agg(bucketed, value_col, by=keys, delta=delta)
-    _upsert_commit(
-        new,
-        keys,
-        bucket_sec,
-        table_dir,
-        ingest_id,
-        last,
-        merge_fn=lambda df, ks: tdigest_merge_agg(df, by=ks),
-    )
-    return ingest_id
 
-
-def _upsert_commit(
-    new: DataFrame,
-    keys: list[str],
-    bucket_sec: int,
-    table_dir: str,
-    ingest_id: int,
-    last: int | None,
-    merge_fn,
-) -> None:
-    """Shared incremental-view-maintenance commit: only buckets present
-    in this ingest go through the merge; untouched rows pass through
-    byte-identical (same split as digest_sink)."""
-    spark = new.sparkSession
-    if last is not None:
-        new = new.localCheckpoint(eager=True)
-        old = spark.read.parquet(table_dir)
-        ks = new.select(*keys).distinct()
-        touched, untouched = _split_touched(old, ks, keys)
-        if "bucket_sec" in old.columns:
+    def build_new(old: DataFrame | None):
+        new = build(bucketed, keys)
+        if old is not None and "bucket_sec" in old.columns:
             # downsampled table: keep per-row granularity alive
             new = new.withColumn("bucket_sec", F.lit(int(bucket_sec)).cast("long"))
-            merged = _merge_with_widths(
-                touched.unionByName(new), keys, merge_fn
-            ).unionByName(untouched)
-        else:
-            merged = merge_fn(touched.unionByName(new), keys).unionByName(untouched)
-    else:
-        merged = new
-    _commit_snapshot(merged, table_dir, ingest_id)
+        return old, new
+
+    return snapshot_upsert(
+        rows.sparkSession,
+        table_dir,
+        keys,
+        build_new,
+        _width_carry(merge_fn),
+        ingest_id=ingest_id,
+    )
 
 
 def sketch_hypertable_upsert(
@@ -440,28 +423,17 @@ def sketch_hypertable_upsert(
         sketch_merge_agg,
     )
 
-    by = list(by)
-    keys = ["bucket_start", *by]
     kinds = {name: sp[0] for name, sp in _norm_specs(dict(specs)).items()}
-    last = _last_committed_batch(table_dir)
-    if ingest_id is None:
-        ingest_id = 0 if last is None else last + 1
-    if last is not None and ingest_id <= last:
-        return None
-    bucketed = rows.withColumn("bucket_start", time_bucket(ts_col, bucket_sec)).filter(
-        F.col("bucket_start").isNotNull()
-    )
-    new = sketch_build(bucketed, specs, by=keys, strategy=strategy)
-    _upsert_commit(
-        new,
-        keys,
+    return _bucket_upsert(
+        rows,
+        ts_col,
         bucket_sec,
         table_dir,
+        by,
         ingest_id,
-        last,
-        merge_fn=lambda df, ks: sketch_merge_agg(df, kinds, by=ks),
+        build=lambda df, keys: sketch_build(df, specs, by=keys, strategy=strategy),
+        merge_fn=lambda df, keys: sketch_merge_agg(df, kinds, by=keys),
     )
-    return ingest_id
 
 
 def hypertable_window_stats(
@@ -760,9 +732,10 @@ def hypertable_info(
     t-digest table; the blob columns for a companion-sketch table)."""
     from datetime import datetime, timezone
 
-    last = _last_committed_batch(table_dir)
-    if last is None:
+    ver = snapshot_version(table_dir)
+    if ver is None:
         raise ValueError(f"hypertable_info: no table at {table_dir!r}")
+    last, rev = ver
     t = spark.read.parquet(table_dir)
     if "bucket_sec" not in t.columns:
         t = t.withColumn("bucket_sec", F.lit(int(bucket_sec)).cast("long"))
@@ -791,7 +764,7 @@ def hypertable_info(
         )
     return {
         "last_ingest_id": last,
-        "snapshot_rev": _current_snapshot_rev(table_dir),
+        "snapshot_rev": rev,
         "group_keys": keys,
         "value_cols": list(value_cols),
         "n_rows": sum(r["rows"] for r in per_width),
@@ -837,24 +810,13 @@ def hypertable_sink(
     without it every late row still merges additively into its bucket
     — the upsert touches only that bucket's row)."""
     by = list(by)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        hypertable_upsert(
-            batch_df,
-            value_col,
-            ts_col,
-            bucket_sec,
-            table_dir,
-            by=by,
-            delta=delta,
-            ingest_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return snapshot_sink(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: hypertable_upsert(
+            batch_df, value_col, ts_col, bucket_sec, table_dir,
+            by=by, delta=delta, ingest_id=batch_id,
+        ),
     )
 
 
@@ -880,22 +842,11 @@ def sketch_hypertable_sink(
     specs = dict(specs)
     _norm_specs(specs)  # validate at sink construction, not mid-stream
     by = list(by)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sketch_hypertable_upsert(
-            batch_df,
-            specs,
-            ts_col,
-            bucket_sec,
-            table_dir,
-            by=by,
-            strategy=strategy,
-            ingest_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return snapshot_sink(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: sketch_hypertable_upsert(
+            batch_df, specs, ts_col, bucket_sec, table_dir,
+            by=by, strategy=strategy, ingest_id=batch_id,
+        ),
     )

@@ -20,8 +20,9 @@ Three shapes:
 * :func:`digest_sink` — ``foreachBatch`` merging each micro-batch's
   partial digests into a checkpoint parquet table via the same
   associative merge as the batch path (streaming query == incremental
-  batch job; exactly-once per micro-batch via atomic snapshot-pointer
-  commits that carry the last-merged batch id WITH the data).
+  batch job; exactly-once per micro-batch through the snapshot-table
+  protocol of ``streaming._batch``). :func:`sketch_sink` is its twin
+  for the companion sketches.
 
 Late data: both shapes compose with ``withWatermark`` upstream —
 rows later than the watermark are dropped by Spark before they reach
@@ -41,7 +42,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from tdigest_spark.operators.digest_agg import DIGEST_TYPE
 from tdigest_spark.sketch.tdigest import TDigest
-from tdigest_spark.streaming._batch import drain_batch
+from tdigest_spark.streaming._batch import snapshot_sink, snapshot_upsert
 
 __all__ = [
     "stateful_digest_stream",
@@ -240,179 +241,29 @@ def digest_sink(
     delta: int = 200,
 ):
     """foreachBatch sink: merge each micro-batch into a digest parquet
-    table with SNAPSHOT-POINTER commits (a one-symlink Iceberg-style
-    table): each batch writes a fresh snapshot directory containing the
-    merged parquet AND a ``_meta.json`` recording the batch id (Spark
-    readers skip ``_``-prefixed files), then atomically repoints
-    ``table_dir`` — a symlink — at it via ``os.replace``. Data and the
-    last-merged-batch marker therefore commit in ONE atomic step: a
-    crash at any point leaves either the old snapshot (replay re-merges
-    — correct) or the new one (replay is skipped — correct); the
-    round-1 double-merge window between table overwrite and sidecar
-    write is gone. ``spark.read.parquet(table_dir)`` keeps working
-    (the symlink resolves transparently).
-
-    A missing table is detected explicitly via the pointer, never by
-    swallowing read errors (a transient read failure must fail the
-    batch, not silently reset history). Each commit keeps the current
-    snapshot plus its predecessor and prunes anything older — a reader
-    that resolved the pointer just before a commit finishes its scan on
-    the grace generation; it is deleted one commit later, never under a
-    live reader.
-
-    Scope: the pointer lives on the driver-local filesystem (or NFS
-    shared with it), the deployment shape of a foreachBatch driver
-    callback; for object-storage tables use the Iceberg path in
-    ``sources.catalog``, whose commit protocol does this natively.
-    Returns the StreamingQuery."""
+    table under the snapshot-table protocol of ``streaming._batch``
+    (one atomic symlink swap commits the merged data together with the
+    last-merged batch id, so a crash at any point leaves a consistent
+    table and a replayed batch is skipped). Only groups present in the
+    micro-batch go through the merge; untouched groups' digests pass
+    through byte-identical — which is also more faithful, since
+    re-merging a lone digest at working delta could re-compress it for
+    no reason. Returns the StreamingQuery."""
     from tdigest_spark.operators.digest_agg import tdigest_agg, tdigest_merge_agg
 
     by = list(by)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = _last_committed_batch(table_dir)
-        if last is not None and batch_id <= last:
-            drain_batch(batch_df)  # replayed batch: already merged
-            return
-        new = tdigest_agg(batch_df, value_col, by=by, delta=delta)
-        if last is not None and by:
-            # incremental-view maintenance (same split as sketch_sink):
-            # only groups present in this micro-batch go through the
-            # merge stage; untouched groups' digests pass through
-            # byte-identical — which is also more faithful, since
-            # re-merging a lone digest at working delta could
-            # re-compress it for no reason.
-            new = new.localCheckpoint(eager=True)
-            old = spark.read.parquet(table_dir)
-            keys = new.select(*by).distinct()
-            touched, untouched = _split_touched(old, keys, by)
-            merged = tdigest_merge_agg(
-                touched.unionByName(new), by=by
-            ).unionByName(untouched)
-        elif last is not None:
-            old = spark.read.parquet(table_dir)
-            merged = tdigest_merge_agg(old.unionByName(new), by=by)
-        else:
-            merged = new
-        _commit_snapshot(merged, table_dir, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _split_touched(old: DataFrame, keys_df: DataFrame, by: Sequence[str]):
-    """(touched, untouched) split of ``old`` by membership of its key
-    tuple in ``keys_df`` — NULL-SAFE: a plain ``join(keys, by)`` uses
-    NULL-unequal semantics, so a NULL-keyed group would never match
-    the semi side and a duplicate row would be appended on every
-    batch (one row per ingest instead of one per group).
-
-    The key side is re-aliased to fresh names first: when ``keys_df``
-    derives from the same plan as ``old`` (e.g. a filter split of one
-    table), same-name refs would resolve to the SAME attribute —
-    trivially-true predicates at best, AnalysisException at worst."""
-    keys_df = keys_df.select([keys_df[c].alias(f"_k_{c}") for c in by])
-    cond = None
-    for c in by:
-        eq = old[c].eqNullSafe(keys_df[f"_k_{c}"])
-        cond = eq if cond is None else (cond & eq)
-    return (
-        old.join(keys_df, cond, "left_semi"),
-        old.join(keys_df, cond, "left_anti"),
-    )
-
-
-def _last_committed_batch(table_dir: str) -> int | None:
-    """Resolve the snapshot pointer: the last-merged batch id, or None
-    if the table doesn't exist yet. A missing table is detected
-    explicitly via the pointer, never by swallowing read errors."""
-    import json
-    import os
-
-    if os.path.lexists(table_dir) and not os.path.islink(table_dir):
-        raise ValueError(
-            f"snapshot sink: {table_dir!r} exists as a plain directory "
-            "(pre-snapshot-pointer layout); move it aside or start a "
-            "new table_dir"
+    def upsert(batch_df: DataFrame, batch_id: int) -> int | None:
+        return snapshot_upsert(
+            batch_df.sparkSession,
+            table_dir,
+            by,
+            lambda old: (old, tdigest_agg(batch_df, value_col, by=by, delta=delta)),
+            lambda df, keys: tdigest_merge_agg(df, by=keys),
+            ingest_id=batch_id,
         )
-    if not os.path.lexists(table_dir):
-        return None
-    with open(os.path.join(table_dir, "_meta.json")) as f:
-        return json.load(f)["last_batch"]
 
-
-def _parse_snap(name: str) -> tuple[int, int] | None:
-    """Snapshot dir name -> (batch_id, rev); ``v7`` -> (7, 0),
-    ``v7.2`` -> (7, 2); None for anything else."""
-    if not name.startswith("v"):
-        return None
-    id_s, _, rev_s = name[1:].partition(".")
-    if not id_s.isdigit() or (rev_s and not rev_s.isdigit()):
-        return None
-    return (int(id_s), int(rev_s or 0))
-
-
-def _snap_name(batch_id: int, rev: int) -> str:
-    return f"v{batch_id}" if rev == 0 else f"v{batch_id}.{rev}"
-
-
-def _current_snapshot_rev(table_dir: str) -> int:
-    """Revision of the snapshot the pointer currently resolves to
-    (0 for a plain ``v{id}`` dir)."""
-    import os
-
-    parsed = _parse_snap(os.path.basename(os.readlink(table_dir)))
-    if parsed is None:  # pragma: no cover - foreign symlink target
-        raise ValueError(f"{table_dir!r} does not point at a snapshot dir")
-    return parsed[1]
-
-
-def _commit_snapshot(
-    merged: DataFrame, table_dir: str, batch_id: int, rev: int = 0
-) -> None:
-    """Write ``merged`` as snapshot ``v{batch_id}`` and atomically
-    repoint ``table_dir`` (a symlink) at it — data and the
-    last-merged-batch marker commit in ONE step (the protocol described
-    in :func:`digest_sink`'s docstring). Keeps the predecessor snapshot
-    for readers mid-scan and prunes anything older.
-
-    ``rev`` > 0 commits a REVISION of an existing batch id
-    (``v{batch_id}.{rev}``) — same marker, fresh directory. Used by
-    maintenance passes that must not consume a batch id (hypertable
-    downsample with ``bump_id=False``): writing under a NEW path keeps
-    the plan's lazy reads of the current snapshot valid (overwriting
-    ``v{batch_id}`` in place would delete the very files the merge job
-    is still scanning through the symlink) and keeps the commit atomic."""
-    import json
-    import os
-    import shutil
-
-    snap_root = f"{table_dir}.snapshots"
-    snap = os.path.join(snap_root, _snap_name(batch_id, rev))
-    merged.write.mode("overwrite").parquet(snap)
-    with open(os.path.join(snap, "_meta.json"), "w") as f:
-        json.dump({"last_batch": batch_id}, f)
-    # the commit point: one atomic pointer swap (data + marker)
-    tmplink = f"{table_dir}.lnk.tmp"
-    if os.path.lexists(tmplink):
-        os.remove(tmplink)
-    os.symlink(os.path.abspath(snap), tmplink)
-    os.replace(tmplink, table_dir)
-    # prune all but the current snapshot AND its predecessor: a
-    # reader that resolved the pointer just before this commit may
-    # still be scanning the previous snapshot — it is deleted one
-    # commit later, never under a live reader
-    gens = sorted(
-        (p, s) for s in os.listdir(snap_root)
-        if (p := _parse_snap(s)) is not None
-    )
-    for _, old in gens[:-2]:
-        shutil.rmtree(os.path.join(snap_root, old), ignore_errors=True)
+    return snapshot_sink(stream, checkpoint_dir, upsert)
 
 
 def sketch_sink(
@@ -431,9 +282,9 @@ def sketch_sink(
     sketches in one pass (``sketch_build``; ``specs`` maps output
     column -> ``(kind, value_col, *params)``) and merges them into a
     checkpoint parquet table of binary blobs (``sketch_merge_agg``)
-    under the same atomic snapshot-pointer commit protocol as
-    :func:`digest_sink` — exactly-once per micro-batch, crash-safe
-    replay, readable at any time via ``spark.read.parquet(table_dir)``.
+    under the same snapshot-table protocol as :func:`digest_sink` —
+    exactly-once per micro-batch, crash-safe replay, readable at any
+    time via ``spark.read.parquet(table_dir)``.
 
     Accuracy: HLL (register max), CMS (counter add) and Bloom (bit OR)
     merges are exactly chunking-invariant, so the streamed table equals
@@ -452,40 +303,14 @@ def sketch_sink(
     # construction, not mid-stream); sketch_build normalizes again
     kinds = {name: sp[0] for name, sp in _norm_specs(specs).items()}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = _last_committed_batch(table_dir)
-        if last is not None and batch_id <= last:
-            drain_batch(batch_df)  # replayed batch: already merged
-            return
-        new = sketch_build(batch_df, specs, by=by, strategy=strategy)
-        if last is not None and by:
-            # incremental-view maintenance: only groups PRESENT in this
-            # micro-batch go through the Python merge stage; every
-            # other group's blobs pass through untouched (no
-            # deserialize/merge/reserialize) — at 1e5+ groups with
-            # sparse batches the per-batch work is O(touched groups),
-            # not O(all groups). localCheckpoint: `new` feeds both the
-            # key set and the merge (one Python build, not two).
-            new = new.localCheckpoint(eager=True)
-            old = spark.read.parquet(table_dir)
-            keys = new.select(*by).distinct()
-            touched, untouched = _split_touched(old, keys, by)
-            merged = sketch_merge_agg(
-                touched.unionByName(new), kinds, by=by, strategy=strategy
-            ).unionByName(untouched)
-        elif last is not None:
-            old = spark.read.parquet(table_dir)
-            merged = sketch_merge_agg(
-                old.unionByName(new), kinds, by=by, strategy=strategy
-            )
-        else:
-            merged = new
-        _commit_snapshot(merged, table_dir, batch_id)
+    def upsert(batch_df: DataFrame, batch_id: int) -> int | None:
+        return snapshot_upsert(
+            batch_df.sparkSession,
+            table_dir,
+            by,
+            lambda old: (old, sketch_build(batch_df, specs, by=by, strategy=strategy)),
+            lambda df, keys: sketch_merge_agg(df, kinds, by=keys, strategy=strategy),
+            ingest_id=batch_id,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return snapshot_sink(stream, checkpoint_dir, upsert)

@@ -39,3 +39,31 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_med():
     return SF_DIR_MED
+
+
+@pytest.fixture
+def crash_pointer_swap(monkeypatch):
+    """``arm(table_dir, batch_id)``: make the snapshot-table pointer
+    swap (the ``os.replace`` commit point) raise once, when it would
+    point ``table_dir`` at the snapshot of ``batch_id`` — a crash after
+    the snapshot is written and before it is committed."""
+    from tdigest_spark.streaming import _batch
+
+    real_replace = os.replace
+
+    def arm(table_dir: str, batch_id: int) -> None:
+        armed = [True]
+
+        def replace(src, dst, *args, **kwargs):
+            if (
+                armed[0]
+                and dst == table_dir
+                and os.path.basename(os.readlink(src)) == f"v{batch_id}"
+            ):
+                armed[0] = False
+                raise OSError(f"injected crash before committing batch {batch_id}")
+            return real_replace(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(_batch.os, "replace", replace)
+
+    return arm

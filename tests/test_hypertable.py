@@ -636,7 +636,7 @@ def test_hypertable_sink_downsample_then_resume(spark, tmp_path):
         hypertable_downsample,
         hypertable_sink,
     )
-    from tdigest_spark.streaming.digest_stream import _last_committed_batch
+    from tdigest_spark.streaming._batch import _last_committed_batch
 
     ev = _mk_events(spark)
     base = dt.datetime(2024, 1, 1)
@@ -734,7 +734,7 @@ def test_snapshot_revision_pruning(spark, tmp_path):
     import os
 
     from tdigest_spark.operators.hypertable import hypertable_downsample
-    from tdigest_spark.streaming.digest_stream import _last_committed_batch
+    from tdigest_spark.streaming._batch import _last_committed_batch
 
     ev = _mk_events(spark)
     table = str(tmp_path / "ht_rev")
@@ -772,7 +772,7 @@ def test_sketch_hypertable_sink_matches_one_shot(spark, tmp_path):
         sketch_hypertable_window,
     )
     from tdigest_spark.operators.sketch_agg import sketch_build, sketch_estimates
-    from tdigest_spark.streaming.digest_stream import _last_committed_batch
+    from tdigest_spark.streaming._batch import _last_committed_batch
 
     ev = _mk_uid_events(spark)
     base = dt.datetime(2024, 1, 1)
@@ -803,6 +803,111 @@ def test_sketch_hypertable_sink_matches_one_shot(spark, tmp_path):
         _sk_ests(),
     )
     assert _sk_week_map(got) == _sk_week_map(oneshot)
+
+
+def _write_chunks(ev, src, cuts):
+    """Split ``ev`` at the ``cuts`` timestamps into one parquet file per
+    chunk under ``src`` (one micro-batch each)."""
+    bounds = [None, *cuts, None]
+    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        part = ev
+        if lo is not None:
+            part = part.filter(F.col("ts") >= lo)
+        if hi is not None:
+            part = part.filter(F.col("ts") < hi)
+        part.coalesce(1).write.parquet(str(src / f"chunk={i}"))
+
+
+def test_hypertable_sink_replay_with_stateful_upstream(spark, tmp_path):
+    """A replayed micro-batch must still be DRAINED by the hypertable
+    sink: with streaming_bloom_dedup upstream, skipping the batch
+    without consuming it leaves the dedup state stores uncommitted and
+    Spark 4's commit validation fails the batch. Rerunning with a fresh
+    checkpoint (fresh Bloom state, redelivered batch ids) must leave
+    the window stats unchanged."""
+    import datetime as dt
+
+    from tdigest_spark.operators.hypertable import hypertable_sink
+    from tdigest_spark.streaming.dedup_stream import streaming_bloom_dedup
+
+    ev = _mk_events(spark)
+    src = tmp_path / "ht_dedup_src"
+    _write_chunks(ev, src, [dt.datetime(2024, 1, 15)])
+    table = str(tmp_path / "ht_dedup_table")
+
+    def run(ck: str):
+        stream = (
+            spark.readStream.schema("ts timestamp, g string, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/chunk=*")
+        )
+        fresh = streaming_bloom_dedup(
+            stream.withColumn("k", F.concat_ws("|", "g", "value")), "k", buckets=4
+        ).drop("k")
+        q = hypertable_sink(
+            fresh, "value", "ts", DAY, table, str(tmp_path / ck), by=["g"],
+            delta=LOSSLESS,
+        )
+        q.awaitTermination(300)
+
+    def week_stats():
+        return _as_map(
+            hypertable_window_stats(spark, table, DAY, WEEK, _stats_map(), by=["g"])
+        )
+
+    run("ck_a")
+    before = week_stats()
+    assert before == _as_map(_direct_week_stats(ev))
+    run("ck_b")
+    assert week_stats() == before
+
+
+def test_sketch_hypertable_sink_crash_before_commit_resumes_exactly(
+    spark, tmp_path, crash_pointer_swap
+):
+    """A crash at the commit point of batch 1 leaves the bucketed blob
+    table at batch 0; the restart with the SAME checkpoint ends with
+    the table of an uninterrupted run, blob bytes included."""
+    import datetime as dt
+
+    from tdigest_spark.operators.hypertable import sketch_hypertable_sink
+    from tdigest_spark.streaming._batch import _last_committed_batch
+
+    base = dt.datetime(2024, 1, 1)
+    src = tmp_path / "skht_crash_src"
+    _write_chunks(
+        _mk_uid_events(spark), src,
+        [base + dt.timedelta(days=10), base + dt.timedelta(days=20)],
+    )
+
+    def run(table: str, ck: str):
+        stream = (
+            spark.readStream.schema("ts timestamp, g string, uid string, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/chunk=*")
+        )
+        q = sketch_hypertable_sink(stream, _sk_specs(), "ts", DAY, table, ck, by=["g"])
+        q.awaitTermination(300)
+
+    def rows(table: str):
+        return sorted(
+            (
+                tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+                for r in spark.read.parquet(table).collect()
+            ),
+            key=lambda t: (t[0], t[1]),
+        )
+
+    clean = str(tmp_path / "skht_clean")
+    run(clean, str(tmp_path / "skht_ck_clean"))
+    table, ck = str(tmp_path / "skht_crashed"), str(tmp_path / "skht_ck_crashed")
+    crash_pointer_swap(table, 1)
+    with pytest.raises(Exception, match="injected crash"):
+        run(table, ck)
+    assert _last_committed_batch(table) == 0
+    run(table, ck)
+    assert _last_committed_batch(table) == _last_committed_batch(clean) == 2
+    assert rows(table) == rows(clean)
 
 
 # ------------------------------------------------------------------- gapfill

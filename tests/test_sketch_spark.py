@@ -489,10 +489,11 @@ def test_kmv_sketch_build_and_samples(spark, sf_dir):
 def test_td_kind_one_pass_with_companions(spark, sf_dir):
     """t-digest as a sketch kind: ONE pass builds the rank sketch AND
     companion sketches together (the scan-fusion shape jobs/webpages.py
-    hand-rolls). Lossless mode makes the blob deterministic: partials
-    and rows strategies agree byte-for-byte, the td_quantile estimate
-    equals tdigest_agg's lossless quantile exactly, and re-merging two
-    halves through sketch_merge_agg reproduces the full build."""
+    runs as one sketch_build). Lossless mode makes the blob
+    deterministic: partials and rows strategies agree byte-for-byte,
+    the td_quantile estimate equals tdigest_agg's lossless quantile
+    exactly, and re-merging two halves through sketch_merge_agg
+    reproduces the full build."""
     from tdigest_spark.operators.digest_agg import tdigest_agg, tdigest_stats
     from tdigest_spark.operators.sketch_agg import (
         sketch_build,

@@ -536,6 +536,43 @@ def test_digest_sink_replay_with_stateful_upstream(spark, stream_dir, tmp_path):
     assert after == before
 
 
+def test_digest_sink_crash_before_commit_resumes_exactly(
+    spark, stream_dir, tmp_path, crash_pointer_swap
+):
+    """A crash at the commit point of batch 1 (its snapshot written,
+    the pointer not yet swapped) leaves the table at batch 0; the
+    restart with the SAME checkpoint re-runs batch 1 and ends with the
+    table of an uninterrupted run, digest for digest."""
+    from tdigest_spark.streaming._batch import _last_committed_batch
+    from tdigest_spark.streaming.digest_stream import digest_sink
+
+    def run(table: str, ck: str):
+        stream = (
+            spark.readStream.schema("event_type string, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{stream_dir}/chunk=*")
+        )
+        q = digest_sink(stream, "value", ["event_type"], table, ck, delta=LOSSLESS)
+        q.awaitTermination(300)
+
+    def rows(table: str):
+        return sorted(
+            (r.asDict(recursive=True) for r in spark.read.parquet(table).collect()),
+            key=lambda d: str(d["event_type"]),
+        )
+
+    clean = str(tmp_path / "clean_table")
+    run(clean, str(tmp_path / "ck_clean"))
+    table, ck = str(tmp_path / "crashed_table"), str(tmp_path / "ck_crashed")
+    crash_pointer_swap(table, 1)
+    with pytest.raises(Exception, match="injected crash"):
+        run(table, ck)
+    assert _last_committed_batch(table) == 0
+    run(table, ck)
+    assert _last_committed_batch(table) == _last_committed_batch(clean) == 2
+    assert rows(table) == rows(clean)
+
+
 def test_streaming_sliding_via_panes(spark, sf_dir, timed_stream_dir, tmp_path):
     """STREAMING sliding windows, the scale-correct composition: the
     stream aggregates each row ONCE into pane-sized (1 day) tumbling

@@ -122,6 +122,48 @@ def test_checkpoint_resume(spark, tmp_path):
         assert rows1[lang]["p50_chars"] == direct[lang]["p50_chars"]
 
 
+def test_checkpoint_resume_after_torn_manifest_write(spark, tmp_path, monkeypatch):
+    """A crash while the manifest is being written (here: on the third
+    bucket, after half the JSON is out) must leave a manifest the
+    rerun can read; the resumed job then equals a clean run."""
+    import types
+
+    from tdigest_spark.jobs import webpages
+
+    calls = {"n": 0}
+
+    def torn_dump(obj, f, **kw):
+        calls["n"] += 1
+        if calls["n"] == 3:
+            f.write(json.dumps(obj, **kw)[:20])
+            raise OSError("injected crash mid-manifest-write")
+        json.dump(obj, f, **kw)
+
+    ckpt = str(tmp_path / "ckpt")
+    with monkeypatch.context() as m:
+        m.setattr(
+            webpages, "json",
+            types.SimpleNamespace(load=json.load, dump=torn_dump, dumps=json.dumps),
+        )
+        with pytest.raises(OSError, match="injected"):
+            run_checkpointed(spark, 4_000, ckpt, "job1", n_buckets=4, delta=1_000_000)
+    done = json.load(open(os.path.join(ckpt, "job1.manifest.json")))["buckets"]
+    assert set(done) == {"0", "1"}
+
+    resumed = {r["lang"]: r for r in run_checkpointed(
+        spark, 4_000, ckpt, "job1", n_buckets=4, delta=1_000_000
+    ).collect()}
+    m2 = json.load(open(os.path.join(ckpt, "job1.manifest.json")))["buckets"]
+    assert set(m2) == {"0", "1", "2", "3"}
+    for k in ("0", "1"):
+        assert m2[k]["wall_s"] == done[k]["wall_s"]  # not re-run
+    clean = {r["lang"]: r for r in run_checkpointed(
+        spark, 4_000, str(tmp_path / "clean"), "job1", n_buckets=4,
+        delta=1_000_000,
+    ).collect()}
+    assert resumed == clean
+
+
 def test_catalog_gated_io_roundtrip(spark, tmp_path):
     """Iceberg-or-parquet gate: in this sandbox the probe must degrade
     to parquet, and the round trip must preserve schema + rows +
