@@ -174,9 +174,9 @@ def snapshot_upsert(
     ``base``'s column order.
 
     ``ingest_id`` defaults to the next id (0 for a new table).
-    ``bump_id=False`` re-commits the CURRENT id as a fresh revision
-    instead of consuming one — for maintenance passes over a table
-    whose id chain a streaming checkpoint owns."""
+    ``bump_id=False`` re-commits the CURRENT id of an existing table as
+    a fresh revision instead of consuming one — for maintenance passes
+    over a table whose id chain a streaming checkpoint owns."""
     keys = list(keys)
     ver = snapshot_version(table_dir)
     last = None if ver is None else ver[0]
