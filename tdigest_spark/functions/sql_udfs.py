@@ -10,23 +10,41 @@ query algebra as plain functions over a digest value
 These run over *digest/sketch rows* — O(groups) rows, never the raw
 table — so a per-row Python loop here is driver-light by construction
 (the heavy lifting happened in the vectorized build/merge UDAFs). All
-are Arrow-batched pandas UDFs, one deserialize per row per batch.
+are Arrow-batched pandas UDFs. The statistics of ``_SQL_STATS`` run
+the shared evaluator of ``sketch_estimates``/``tdigest_stats``: same
+values, same NULL rule (NULL struct = empty digest, NULL blob = NULL).
 """
 
 from __future__ import annotations
+
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from tdigest_spark.operators.sketch_agg import _decode, _est_fn, _evaluate
 from tdigest_spark.sketch.bloom import BloomFilter
 from tdigest_spark.sketch.cms import CountMin
-from tdigest_spark.sketch.hll import HLL
-from tdigest_spark.sketch.kll import KLL
 from tdigest_spark.sketch.tdigest import TDigest
 
 __all__ = ["register_sql_functions"]
+
+# SQL name -> (estimate, number of arguments after the digest/blob):
+# td_<stat> reads a digest struct through _eval_stat, the rest are
+# _EST_FNS entries over a blob
+_SQL_STATS = {
+    "tdigest_quantile": ("td_quantile", 1),
+    "tdigest_cdf": ("td_cdf", 1),
+    "tdigest_median": ("td_median", 0),
+    "tdigest_mean": ("td_mean", 0),
+    "tdigest_stddev": ("td_stddev", 0),
+    "tdigest_trimmed_mean": ("td_trimmed_mean", 2),
+    "tdigest_total_weight": ("td_total_weight", 0),
+    "kll_quantile": ("kll_quantile", 1),
+    "hll_estimate": ("hll_estimate", 0),
+}
 
 
 def _digests(d) -> list[TDigest]:
@@ -36,7 +54,22 @@ def _digests(d) -> list[TDigest]:
         rows = d.to_dict("records")
     else:
         rows = [r if isinstance(r, dict) else r.asDict() for r in d]
-    return [TDigest.from_row(r) for r in rows]
+    return list(_decode("td", rows, struct=True))
+
+
+def _stat_udf(name: str, est: str, n_args: int):
+    """DOUBLE ``name(cell, arg_1..arg_n)`` evaluating ``est``; arguments
+    are cast to float (a SQL literal like 0.9 is a DECIMAL)."""
+    kind, fn = _est_fn(est)
+
+    def udf(cells, *args):
+        if len(args) != n_args:
+            raise TypeError(f"{name} takes {n_args + 1} argument(s)")
+        objs = _digests(cells) if kind == "td" else _decode(kind, cells)
+        rows = zip(*(a.astype("float64") for a in args)) if args else repeat(())
+        return _evaluate(fn, objs, rows)
+
+    return pandas_udf(udf, T.DoubleType())
 
 
 def register_sql_functions(spark: SparkSession) -> None:
@@ -56,59 +89,7 @@ def register_sql_functions(spark: SparkSession) -> None:
     the first argument).
     """
 
-    @pandas_udf(T.DoubleType())
-    def tdigest_quantile(d: pd.DataFrame, q: pd.Series) -> pd.Series:
-        return pd.Series(
-            [t.quantile(float(x)) for t, x in zip(_digests(d), q)], dtype="float64"
-        )
-
-    @pandas_udf(T.DoubleType())
-    def tdigest_cdf(d: pd.DataFrame, x: pd.Series) -> pd.Series:
-        return pd.Series(
-            [t.cdf(float(v)) for t, v in zip(_digests(d), x)], dtype="float64"
-        )
-
-    @pandas_udf(T.DoubleType())
-    def tdigest_median(d: pd.DataFrame) -> pd.Series:
-        return pd.Series([t.median() for t in _digests(d)], dtype="float64")
-
-    @pandas_udf(T.DoubleType())
-    def tdigest_mean(d: pd.DataFrame) -> pd.Series:
-        return pd.Series([t.mean() for t in _digests(d)], dtype="float64")
-
-    @pandas_udf(T.DoubleType())
-    def tdigest_stddev(d: pd.DataFrame) -> pd.Series:
-        return pd.Series([t.stddev() for t in _digests(d)], dtype="float64")
-
-    @pandas_udf(T.DoubleType())
-    def tdigest_trimmed_mean(d: pd.DataFrame, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                t.trimmed_mean(float(a), float(b))
-                for t, a, b in zip(_digests(d), lo, hi)
-            ],
-            dtype="float64",
-        )
-
-    @pandas_udf(T.DoubleType())
-    def tdigest_total_weight(d: pd.DataFrame) -> pd.Series:
-        return pd.Series(
-            [0.0 if t.is_empty() else t.total_weight for t in _digests(d)],
-            dtype="float64",
-        )
-
-    @pandas_udf(T.DoubleType())
-    def kll_quantile(b: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series(
-            [KLL.from_bytes(bytes(r)).quantile(float(x)) for r, x in zip(b, q)],
-            dtype="float64",
-        )
-
-    @pandas_udf(T.DoubleType())
-    def hll_estimate(b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [HLL.from_bytes(bytes(r)).estimate() for r in b], dtype="float64"
-        )
+    udfs = {name: _stat_udf(name, *spec) for name, spec in _SQL_STATS.items()}
 
     @pandas_udf(T.LongType())
     def cms_count(b: pd.Series, key: pd.Series) -> pd.Series:
@@ -142,20 +123,12 @@ def register_sql_functions(spark: SparkSession) -> None:
     tdigest_w1 = _drift_udf(w1_distance)
     tdigest_psi = _drift_udf(psi_score)
 
-    for name, fn in (
-        ("tdigest_quantile", tdigest_quantile),
-        ("tdigest_cdf", tdigest_cdf),
-        ("tdigest_median", tdigest_median),
-        ("tdigest_mean", tdigest_mean),
-        ("tdigest_stddev", tdigest_stddev),
-        ("tdigest_trimmed_mean", tdigest_trimmed_mean),
-        ("tdigest_total_weight", tdigest_total_weight),
-        ("kll_quantile", kll_quantile),
-        ("hll_estimate", hll_estimate),
-        ("cms_count", cms_count),
-        ("bloom_contains", bloom_contains),
-        ("tdigest_ks", tdigest_ks),
-        ("tdigest_w1", tdigest_w1),
-        ("tdigest_psi", tdigest_psi),
-    ):
+    udfs |= {
+        "cms_count": cms_count,
+        "bloom_contains": bloom_contains,
+        "tdigest_ks": tdigest_ks,
+        "tdigest_w1": tdigest_w1,
+        "tdigest_psi": tdigest_psi,
+    }
+    for name, fn in udfs.items():
         spark.udf.register(name, fn)

@@ -395,8 +395,10 @@ def tdigest_stats(
         {"median": ("quantile", 0.5), "p99": ("quantile", 0.99),
          "mu": ("mean",), "tm": ("trimmed_mean", 0.1, 0.9)}
 
-    Runs as one vectorized pass per Arrow batch; digests are tiny
-    (O(delta)) so this is driver-light and fully distributed.
+    Runs as one ``mapInPandas`` pass of the shared evaluator,
+    :func:`~tdigest_spark.operators.sketch_agg.sketch_estimates` (stat
+    ``s`` is its ``td_s``), the one the SQL ``tdigest_*`` functions run.
+    A NULL digest is the empty digest: NULL stats, ``total_weight`` 0.0.
 
     Digest-aware rewrite (the SURVEY §8 fusion slice): calling
     ``tdigest_stats`` on a DataFrame that IS a ``tdigest_stats`` result
@@ -426,24 +428,16 @@ def tdigest_stats(
             "chain stats calls directly on a tdigest_stats result to fuse, or "
             "evaluate all specs in one call)"
         )
-    keep = [c for c in df.columns if c != digest_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in keep]
-        + [T.StructField(name, T.DoubleType(), True) for name in spec]
+    # sketch_agg imports this module, hence the function-level import
+    from tdigest_spark.operators.sketch_agg import sketch_estimates
+
+    out = sketch_estimates(
+        df if spec else df.drop(digest_col),  # an empty spec names no sketch
+        {
+            name: (f"td_{stat}", digest_col, *args)
+            for name, (stat, *args) in spec.items()
+        },
     )
-
-    def evaluate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[keep].copy()
-            digests = [TDigest.from_row(r) for r in pdf[digest_col]]
-            for name, (stat, *args) in spec.items():
-                out[name] = [
-                    _eval_stat(d, stat, tuple(args)) for d in digests
-                ]
-                out[name] = out[name].astype("float64")
-            yield out
-
-    out = df.mapInPandas(evaluate, out_schema)
     # remember the provenance so a chained tdigest_stats call can fuse
     # with this one instead of adding a second Python stage. NOTE: the
     # fused rebuild drops the digest column like this call does, so it
@@ -778,8 +772,9 @@ def with_equidepth_bucket(
     ``max_broadcast_groups`` the digest table is collected once,
     reduced driver-side to O(groups x n_buckets) cut arrays, and either
     inlined as a literal (global) or broadcast-joined (grouped); above
-    it the cut arrays are computed DISTRIBUTEDLY (one mapInPandas over
-    the digest table, never collected) and shuffle-joined onto the rows
+    it the cut arrays are computed DISTRIBUTEDLY (:func:`tdigest_stats`
+    quantile columns over the digest table, gathered with ``F.array``,
+    never collected) and shuffle-joined onto the rows
     null-safely. Either way the assignment itself is a pure codegen
     array scan — NO Python stage touches the rows. Pass a precomputed
     ``digests`` table to skip the build scan entirely (e.g. the same
@@ -823,33 +818,19 @@ def with_equidepth_bucket(
     if head is None:
         if not by:
             raise AssertionError("keyless digest table cannot exceed one row")
-        cut_schema = T.StructType(
-            [
-                T.StructField(f"__ck_{c}", digests.schema[c].dataType, True)
-                for c in by
-            ]
-            + [T.StructField("__cuts", T.ArrayType(T.DoubleType()), True)]
+        qcols = [f"__q{i}" for i in range(len(qs))]
+        stats = tdigest_stats(
+            digests.select(*by, digest_col),
+            {"__tw": ("total_weight",)}
+            | {c: ("quantile", q) for c, q in zip(qcols, qs)},
+            digest_col,
         )
-
-        def to_cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = pd.DataFrame({f"__ck_{c}": pdf[c] for c in by})
-                arrs = []
-                for d in pdf[digest_col]:
-                    if d is None:
-                        arrs.append(None)
-                        continue
-                    td = TDigest.from_row(d)
-                    arrs.append(
-                        [float(td.quantile(q)) for q in qs]
-                        if td.total_weight > 0
-                        else None
-                    )
-                out["__cuts"] = arrs
-                yield out
-
-        cuts_df = digests.select(*by, digest_col).mapInPandas(to_cuts, cut_schema)
-        return join_cuts(cuts_df.where(F.col("__cuts").isNotNull()), False)
+        # an empty (or NULL) digest has no cuts: its rows get NULL
+        cuts_df = stats.where(F.col("__tw") > 0).select(
+            *[F.col(c).alias(f"__ck_{c}") for c in by],
+            F.array(*map(F.col, qcols)).cast("array<double>").alias("__cuts"),
+        )
+        return join_cuts(cuts_df, False)
 
     cuts: dict[tuple, list[float]] = {}
     for r in head:

@@ -124,19 +124,22 @@ def build_neardup_index(
         partition_by=("band", "shard"),
     )
     write_table(sh, os.path.join(index_dir, _SHINGLES_SUB))
-    with open(os.path.join(index_dir, _PARAMS_FILE), "w") as f:
-        json.dump(
-            {
-                "id_col": id_col,
-                "shingle_k": shingle_k,
-                "n_hashes": n_hashes,
-                "bands": bands,
-                "n_shards": n_shards,
-                "fmt": fmt,
-            },
-            f,
-        )
+    _replace_json(
+        os.path.join(index_dir, _PARAMS_FILE),
+        dict(id_col=id_col, shingle_k=shingle_k, n_hashes=n_hashes,
+             bands=bands, n_shards=n_shards, fmt=fmt),
+    )
     return fmt
+
+
+def _replace_json(path: str, obj) -> None:
+    """The one writer of the ``_params.json`` sidecar (and the near-dup
+    manifest): write-temp + ``os.replace``, so a reader sees the old
+    file or the new one, never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def _load_params(index_dir: str) -> dict:

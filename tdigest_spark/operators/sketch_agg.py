@@ -21,6 +21,7 @@ merge contract mirrors its digest ``<>`` (``Tree/Internal.hs:65-77``).
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tdigest_spark.operators.digest_agg import canon_key
+from tdigest_spark.operators.digest_agg import _eval_stat, canon_key
 from tdigest_spark.sketch.bloom import BloomFilter
 from tdigest_spark.sketch.cms import CountMin
 from tdigest_spark.sketch.fd import FrequentDirections, stack_vectors
@@ -387,6 +388,19 @@ def sketch_build(
     return _final_merge(partials, kinds, by, out_schema)
 
 
+def _merge_cells(kind: str, cells, acc=None):
+    """Merge a column of blobs into ``acc``; NULL blobs are skipped, so
+    all-NULL cells leave ``acc`` (None: the merge is NULL)."""
+    for obj in _decode(kind, cells):
+        if obj is not None:
+            acc = obj if acc is None else acc.merge(obj)
+    return acc
+
+
+def _ship(kind: str, acc) -> bytes | None:
+    return None if acc is None else KINDS[kind].ship(acc).to_bytes()
+
+
 def _final_merge(
     partials: DataFrame, kinds: dict[str, str], by: list, out_schema
 ) -> DataFrame:
@@ -400,12 +414,7 @@ def _final_merge(
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         out = {c: [pdf[c].iloc[0]] for c in by}
         for c, kind in kinds.items():
-            acc = None
-            for b in pdf[c]:
-                if b is not None:
-                    obj = _CLS[kind].from_bytes(bytes(b))
-                    acc = obj if acc is None else acc.merge(obj)
-            out[c] = [None if acc is None else KINDS[kind].ship(acc).to_bytes()]
+            out[c] = [_ship(kind, _merge_cells(kind, pdf[c]))]
         return pd.DataFrame(out)
 
     if by:
@@ -462,12 +471,7 @@ def sketch_merge_agg(
                 key = canon_key(key if isinstance(key, tuple) else (key,))
                 sk = accs.setdefault(key, {})
                 for c in cols:
-                    acc = sk.get(c)
-                    for b in g[c]:
-                        obj = _CLS[kinds[c]].from_bytes(bytes(b))
-                        acc = obj if acc is None else acc.merge(obj)
-                    if acc is not None:
-                        sk[c] = acc
+                    sk[c] = _merge_cells(kinds[c], g[c], sk.get(c))
         if not accs:
             return
         data: dict[str, list] = {c: [] for c in by}
@@ -477,7 +481,7 @@ def sketch_merge_agg(
             for c, k in zip(by, key):
                 data[c].append(k)
             for c in cols:
-                data[c].append(KINDS[kinds[c]].ship(sk[c]).to_bytes())
+                data[c].append(_ship(kinds[c], sk[c]))
         yield pd.DataFrame(data)
 
     if strategy == "rows":
@@ -577,23 +581,49 @@ def panes_to_sliding_sketches(
 
 
 _EST_FNS = {
-    # est name -> (blob kind, fn(obj, *args) -> float, spark type)
-    "hll_estimate": ("hll", lambda o: o.estimate(), T.DoubleType()),
-    "kll_quantile": ("kll", lambda o, q: o.quantile(q), T.DoubleType()),
-    "kll_cdf": ("kll", lambda o, x: o.cdf(x), T.DoubleType()),
-    "kll_n": ("kll", lambda o: float(o.n), T.DoubleType()),
-    "cms_total": ("cms", lambda o: float(o.total), T.DoubleType()),
-    "cms_eps_bound": ("cms", lambda o: o.eps_bound(), T.DoubleType()),
-    "bloom_fpp": ("bloom", lambda o: o.expected_fpp(), T.DoubleType()),
-    "kmv_estimate": ("kmv", lambda o: o.estimate(), T.DoubleType()),
-    "td_quantile": ("td", lambda o, q: o.quantile(q), T.DoubleType()),
-    "td_cdf": ("td", lambda o, x: o.cdf(x), T.DoubleType()),
-    "td_mean": ("td", lambda o: o.mean(), T.DoubleType()),
-    "td_total_weight": ("td", lambda o: float(o.total_weight), T.DoubleType()),
-    "fd_n_rows": ("fd", lambda o: float(o.n_rows), T.DoubleType()),
-    "fd_frob_sq": ("fd", lambda o: o.frob_sq, T.DoubleType()),
-    "fd_err_bound": ("fd", lambda o: o.error_bound(), T.DoubleType()),
+    # est name -> (blob kind, fn(obj, *args) -> float); t-digest
+    # statistics are the td_<stat> rule of _est_fn, not entries here
+    "hll_estimate": ("hll", lambda o: o.estimate()),
+    "kll_quantile": ("kll", lambda o, q: o.quantile(q)),
+    "kll_cdf": ("kll", lambda o, x: o.cdf(x)),
+    "kll_n": ("kll", lambda o: float(o.n)),
+    "cms_total": ("cms", lambda o: float(o.total)),
+    "cms_eps_bound": ("cms", lambda o: o.eps_bound()),
+    "bloom_fpp": ("bloom", lambda o: o.expected_fpp()),
+    "kmv_estimate": ("kmv", lambda o: o.estimate()),
+    "fd_n_rows": ("fd", lambda o: float(o.n_rows)),
+    "fd_frob_sq": ("fd", lambda o: o.frob_sq),
+    "fd_err_bound": ("fd", lambda o: o.error_bound()),
 }
+
+
+def _est_fn(est: str):
+    """est name -> (blob kind, fn); ``td_<stat>`` is ``_eval_stat``, so
+    it takes exactly the stats ``tdigest_stats`` takes."""
+    if est.startswith("td_"):
+        stat = est[3:]
+        return "td", lambda d, *args: _eval_stat(d, stat, args)
+    return _EST_FNS[est]
+
+
+def _decode(kind: str, cells, struct: bool = False) -> Iterator:
+    """Decode a column of sketch cells lazily, one decode per cell. A
+    ``DIGEST_TYPE`` struct cell is read with ``TDigest.from_row``, so a
+    NULL struct is the empty digest; a blob is read with the kind's
+    ``from_bytes``, and a NULL blob stays None (its estimates are NULL;
+    the merges skip it)."""
+    if struct:
+        return (TDigest.from_row(r) for r in cells)
+    cls = _CLS[kind]
+    return (None if b is None else cls.from_bytes(bytes(b)) for b in cells)
+
+
+def _evaluate(fn, objs, arg_rows) -> pd.Series:
+    """``fn(obj, *args)`` per decoded cell as float64 (NULL for None)."""
+    return pd.Series(
+        [None if o is None else fn(o, *a) for o, a in zip(objs, arg_rows)],
+        dtype="float64",
+    )
 
 
 def kmv_samples(
@@ -623,31 +653,37 @@ def kmv_samples(
 def sketch_estimates(
     df: DataFrame, est_specs: dict[str, tuple], drop_sketches: bool = True
 ) -> DataFrame:
-    """Evaluate estimates over sketch-blob columns. ``est_specs`` maps
+    """Evaluate estimates over sketch columns. ``est_specs`` maps
     output column -> ``(est_name, sketch_col, *args)``, e.g.
     ``{"n_distinct": ("hll_estimate", "hll_text"),
-       "p50": ("kll_quantile", "kll_len", 0.5)}``."""
+       "p50": ("kll_quantile", "kll_len", 0.5)}``.
+
+    The one stats evaluator (``tdigest_stats`` and the SQL functions
+    call it): ``td_<stat>`` reads a ``"td"`` blob or a ``DIGEST_TYPE``
+    struct column, each cell decoded once per batch (NULL rule: see
+    ``_decode``)."""
+    fns = {name: _est_fn(s[0]) for name, s in est_specs.items()}
     sketch_cols = {s[1] for s in est_specs.values()}
+    structs = {
+        c for c in sketch_cols if isinstance(df.schema[c].dataType, T.StructType)
+    }
     keep = [c for c in df.columns if not (drop_sketches and c in sketch_cols)]
     out_schema = T.StructType(
         [df.schema[c] for c in keep]
-        + [T.StructField(name, _EST_FNS[s[0]][2], True) for name, s in est_specs.items()]
+        + [T.StructField(name, T.DoubleType(), True) for name in est_specs]
     )
 
     def evaluate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf[keep].copy()
-            cache: dict[tuple[str, int], object] = {}
+            objs: dict[tuple[str, str], list] = {}
             for name, (est, col, *args) in est_specs.items():
-                kind, fn, _t = _EST_FNS[est]
-                vals = []
-                for i, b in enumerate(pdf[col]):
-                    obj = cache.get((col, i))
-                    if obj is None:
-                        obj = _CLS[kind].from_bytes(bytes(b))
-                        cache[(col, i)] = obj
-                    vals.append(fn(obj, *args))
-                out[name] = pd.array(vals, dtype="float64")
+                kind, fn = fns[name]
+                if (col, kind) not in objs:
+                    objs[col, kind] = list(_decode(kind, pdf[col], col in structs))
+                out[name] = _evaluate(
+                    fn, objs[col, kind], repeat(tuple(args))
+                ).to_numpy()
             yield out
 
     return df.mapInPandas(evaluate, out_schema)

@@ -65,6 +65,7 @@ from tdigest_spark.operators.neardup_index import (
     _SHINGLES_SUB,
     _index_rows,
     _load_params,
+    _replace_json,
 )
 
 __all__ = [
@@ -99,11 +100,7 @@ def _load_manifest(index_dir: str) -> dict:
 def _commit_manifest(index_dir: str, manifest: dict) -> None:
     """Atomic manifest swap: write-temp + ``os.replace`` — data dirs
     and the replay marker become visible in one step."""
-    p = _manifest_path(index_dir)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, p)
+    _replace_json(_manifest_path(index_dir), manifest)
 
 
 def _ensure_params(index_dir: str, **params) -> dict:
@@ -114,10 +111,7 @@ def _ensure_params(index_dir: str, **params) -> dict:
     if os.path.exists(path):
         return _load_params(index_dir)
     os.makedirs(index_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f)
-    os.replace(tmp, path)
+    _replace_json(path, params)
     return params
 
 
@@ -309,10 +303,7 @@ def neardup_ingest_sink(
                     # pin the actual table format for later sessions' reads
                     # (idempotent rewrite — same content on replay)
                     p["fmt"] = fmt
-                    tmp = os.path.join(index_dir, _PARAMS_FILE) + ".tmp"
-                    with open(tmp, "w") as f:
-                        json.dump(p, f)
-                    os.replace(tmp, os.path.join(index_dir, _PARAMS_FILE))
+                    _replace_json(os.path.join(index_dir, _PARAMS_FILE), p)
                 manifest["segments"] = manifest["segments"] + [seg]
             # an all-dropped batch still advances the replay marker —
             # an empty segment directory would be unreadable parquet
