@@ -6,13 +6,14 @@ partial+final aggregate the reference models as ``Monoid``/``Reducer``
 ``tdigest-bench/src/Simple.hs:289-295``) is built explicitly:
 
   stage 1  ``mapInPandas``  — one digest per (input partition x group),
-           built per Arrow batch and merged lazily inside the partition.
+           built per Arrow batch and merged inside the partition.
            This is the map-side combine: raw rows never shuffle, only
            O(delta)-sized digest structs do.
   stage 2  :func:`tdigest_merge_agg` — ONE merge, two paths by key
            shape: grouped partials go through the JVM k1 merge
            (window cumsum -> closed-form cluster ids -> hash-agg
-           rebuild); a keyless merge is one single-task greedy reduce.
+           rebuild); a keyless merge is one single-task reduce through
+           the numpy kernel, which clusters by the same closed-form ids.
 
 Plan shape at scale: scan (column-pruned to keys+value) -> Python
 partial agg (no shuffle) -> shuffle of ~n_partitions*n_groups tiny
@@ -63,7 +64,7 @@ def canon_key(key: tuple) -> tuple:
 
 
 def _merge_digests(rows: Iterable, delta: int | None = None) -> TDigest:
-    """Greedy merge of digest rows. An explicit ``delta`` re-stamps
+    """Merge digest rows in the numpy kernel. An explicit ``delta`` re-stamps
     every input first, so digests built at different deltas merge and
     the result compresses to ``delta``; ``None`` keeps the carried one."""
     ds = [TDigest.from_row(r) for r in rows]
@@ -76,8 +77,8 @@ def _reduce_keyless(
     partials: DataFrame, digest_col: str, delta: int | None = None
 ) -> DataFrame:
     """The keyless final level: every partial digest goes to one task,
-    which merges them greedily into the single output row, compressed
-    to the public delta."""
+    which merges them into the single output row, compressed to the
+    public delta."""
 
     def reduce(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = (r for pdf in it for r in pdf[digest_col])
@@ -148,11 +149,7 @@ def tdigest_agg(
         for key, d in accs.items():
             for c, k in zip(by, key):
                 data[c].append(k)
-            # one compress to the WORKING delta before the shuffle:
-            # ~LAZY_REL/WORK_MULT-fold smaller wire size AND better
-            # final accuracy than shipping the lazy concat (mid-chain
-            # compress passes dominate deep-chain rank error)
-            data[digest_col].append(d.ship_compressed().to_row())
+            data[digest_col].append(d.to_row())
         yield pd.DataFrame(data)
 
     partials = src.mapInPandas(build_partials, out_schema)
@@ -174,23 +171,25 @@ def tdigest_merge_agg(
     The merge is associative within the published bound, so the merge
     tree's shape is free; the path is chosen by key shape alone:
 
-    - GROUPED (``by`` non-empty): digest merge + k1 compression entirely
-      in JVM expressions. Instead of the greedy sequential pass
-      (``merge``, ``Vector/Internal.hs:142-167``), centroids get a
-      closed-form cluster id ``floor(ksize(q_mid, delta))`` from their
-      mid-rank — the ksize function is monotone, so clusters partition
-      the sorted centroid order and every cluster's q-width is
-      <= 1/delta: a valid t-digest construction with the same published
-      rank-error bound (exact in lossless mode, where every centroid
-      keeps its own cluster). Physical plan: explode -> window cumsum
-      per group -> hash-agg weighted means -> sort_array(collect_list)
-      rebuild; no Python worker, ~10x faster than a per-group pandas
-      merge at thousands of groups (BENCH.md §1d).
-    - KEYLESS (``by`` empty): a partition-local greedy merge, then one
-      single-task greedy reduce over one partial per partition. This
-      plans as two narrow Python stages and one exchange; the keyless
-      JVM merge would add window/aggregate stages whose driver planning
-      alone costs more than the reduce.
+    Both paths cluster by one rule: each centroid gets the closed-form
+    cluster id ``floor(ksize(q_mid, delta))`` from its mid-rank. ksize
+    is monotone, so clusters partition the sorted centroid order and no
+    cluster spans more than one k1 unit, a q-width of
+    ``pi*sqrt(q(1-q))/delta`` (``pi/(2*delta)`` at the median): a valid
+    t-digest construction with the published rank-error bound, exact
+    in lossless mode, where every centroid keeps its own cluster.
+
+    - GROUPED (``by`` non-empty): merge + k1 clustering entirely in JVM
+      expressions. Physical plan: explode -> window cumsum per group ->
+      hash-agg weighted means -> sort_array(collect_list) rebuild; no
+      Python worker, ~10x faster than a per-group pandas merge at
+      thousands of groups (BENCH.md §1d).
+    - KEYLESS (``by`` empty): a partition-local merge, then one
+      single-task reduce over one partial per partition, both in the
+      numpy kernel (``sketch.tdigest._k1_clusters``). This plans as two
+      narrow Python stages and one exchange; the keyless JVM merge would
+      add window/aggregate stages whose driver planning alone costs more
+      than the reduce.
 
     ``delta``: the output compression. ``None`` keeps the inputs'
     carried delta; an explicit value re-compresses every group to it.
@@ -207,8 +206,7 @@ def tdigest_merge_agg(
             d = _merge_digests(pdf[digest_col], delta)
             acc = d if acc is None else acc.merge(d)
         if acc is not None:
-            # ship at the WORKING delta, as the build's partials do
-            yield pd.DataFrame({digest_col: [acc.ship_compressed().to_row()]})
+            yield pd.DataFrame({digest_col: [acc.to_row()]})
 
     return _reduce_keyless(
         df.select(digest_col).mapInPandas(partial_merge, schema), digest_col, delta
@@ -330,8 +328,9 @@ def tdigest_agg_sql(
     overhead — this path drops it and lets Tungsten sort/aggregate raw
     (key, value, weight) rows (measured ~4x faster at 1e5 groups,
     BENCH.md). Same construction validity and rank-error bound as
-    the grouped :func:`tdigest_merge_agg` (cluster q-widths <= 1/delta); exact in
-    lossless mode. NULL and NaN values are dropped, and with a
+    the grouped :func:`tdigest_merge_agg` (no cluster spans more than
+    one k1 unit, ``pi*sqrt(q(1-q))/delta`` of rank); exact in lossless
+    mode. NULL and NaN values are dropped, and with a
     ``weight_col`` so are NULL/NaN/non-positive weights — the exact
     filter ``TDigest.from_values`` applies, so both build engines see
     the same rows (an unfiltered NaN would sort last in the window and

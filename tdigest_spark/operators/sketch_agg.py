@@ -74,13 +74,6 @@ class _Kind:
             obj.add(vals.to_numpy())
         return obj
 
-    def ship(self, obj):
-        """Hook applied just before serialization (partial yield or
-        merge emit). Identity for the fixed-size sketches; the t-digest
-        kind compresses its lazy buffer here so blobs ship at working
-        delta, not at buffer size."""
-        return obj
-
 
 class _HLLKind(_Kind):
     name, cast = "hll", "string"
@@ -196,9 +189,6 @@ class _TDigestKind(_Kind):
         if len(vals):
             obj = obj.add_values(vals.to_numpy())
         return obj
-
-    def ship(self, obj):
-        return obj.ship_compressed()
 
 
 class _FDKind(_Kind):
@@ -368,7 +358,7 @@ def sketch_build(
                 # a group may have had no non-null rows for one spec
                 # (the grouped path skips them): emit the empty sketch
                 obj = sk.get(name) or KINDS[kind].new(params)
-                data[name].append(KINDS[kind].ship(obj).to_bytes())
+                data[name].append(obj.to_bytes())
         yield pd.DataFrame(data)
 
     if strategy == "rows":
@@ -397,8 +387,8 @@ def _merge_cells(kind: str, cells, acc=None):
     return acc
 
 
-def _ship(kind: str, acc) -> bytes | None:
-    return None if acc is None else KINDS[kind].ship(acc).to_bytes()
+def _blob(acc) -> bytes | None:
+    return None if acc is None else acc.to_bytes()
 
 
 def _final_merge(
@@ -414,7 +404,7 @@ def _final_merge(
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         out = {c: [pdf[c].iloc[0]] for c in by}
         for c, kind in kinds.items():
-            out[c] = [_ship(kind, _merge_cells(kind, pdf[c]))]
+            out[c] = [_blob(_merge_cells(kind, pdf[c]))]
         return pd.DataFrame(out)
 
     if by:
@@ -481,7 +471,7 @@ def sketch_merge_agg(
             for c, k in zip(by, key):
                 data[c].append(k)
             for c in cols:
-                data[c].append(_ship(kinds[c], sk[c]))
+                data[c].append(_blob(sk[c]))
         yield pd.DataFrame(data)
 
     if strategy == "rows":

@@ -96,9 +96,8 @@ def td_merge_engines_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     per event_type merged by (a) the grouped path (pure JVM
     expressions: explode -> window cumsum -> closed-form k1 cluster ids
     -> hash-agg rebuild, no Python worker) and (b) the keyless path
-    (partition-local then single-task greedy merge, parity with the
-    reference's sequential algorithm), run once per event_type and
-    unioned. Lossless, so both hash-match quantile_cont exactly AND
+    (partition-local then single-task merge in the numpy kernel, under
+    the same k1 rule), run once per event_type and unioned. Lossless, so both hash-match quantile_cont exactly AND
     each other. (Consolidates round-2's td_merge_halves_events +
     td_merge_sql_events.)"""
     ev = load(spark, sf_dir, "events").select("event_type", "value")

@@ -9,14 +9,16 @@ phadej/tdigest), re-expressed as columnar numpy passes:
   ``vmin``/``vmax`` + ``total_weight`` + compression ``delta``
   (cf. ``Vector/Internal.hs:29-36``; we track exact min/max instead of
   left/rightmost centroid centers, cf. ``Tree/Internal.hs:114-118``)
-* compression = single greedy pass over cumulative weight under the k1
-  scale function ``k(q) = delta*(asin(2q-1)/pi + 1/2)``
-  (``Vector/Internal.hs:106-136``), vectorized via ``np.searchsorted``
-  over cluster boundaries instead of a per-centroid walk
-  (``Vector/Internal.hs:142-167``)
-* merge = concat + stable sort + one compression pass
-  (``Vector/Internal.hs:176-186``), with the reference's
-  direction-alternation bias mitigation (``Vector/Internal.hs:193-206``)
+* compression = one closed-form k1 clustering: each point's cluster id
+  is ``floor(k(q_mid))`` under the scale function
+  ``k(q) = delta*(asin(2q-1)/pi + 1/2)`` (``Vector/Internal.hs:106-136``),
+  and each id's run collapses to its weighted mean — the same rule the
+  JVM merge applies (``digest_agg._k1_cluster_rebuild``), vectorized
+  over the whole sorted array instead of the reference's per-centroid
+  walk (``Vector/Internal.hs:142-167``)
+* merge = concat + the same clustering at the working delta
+  (``Vector/Internal.hs:176-186``); ``compressed()`` applies it once
+  at the public delta
 
 Query semantics (quantile/cdf) interpolate between *centroid centers*
 in rank space. Deliberate divergence from the reference's
@@ -33,6 +35,7 @@ and NaNs are dropped, matching SQL aggregate semantics.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 from dataclasses import dataclass, field
 
@@ -117,91 +120,42 @@ def _compress_k0(
     return m, w
 
 
-def _compress(
-    means: np.ndarray, weights: np.ndarray, delta: int, reverse: bool
+def _k1_clusters(
+    means: np.ndarray, weights: np.ndarray, delta: float
 ) -> tuple[np.ndarray, np.ndarray]:
-    """One greedy k1 merge pass over mean-sorted centroids.
-
-    Equivalent to the reference's ``merge`` walk
-    (``Vector/Internal.hs:142-167``) but finds each cluster's end with a
-    ``searchsorted`` on cumulative weight instead of stepping
-    one centroid at a time: cluster starting at cumulative fraction q0
-    absorbs centroids while cum/tw <= kinv(k(q0)+1).
-
-    ``reverse=True`` runs the pass from the top end — the reference's
-    direction-alternation anti-bias hack (``Vector/Internal.hs:193-206``).
+    """The one k1 clustering rule, shared with the JVM merge
+    (``digest_agg._k1_cluster_rebuild``): sort the points by
+    (mean, weight), give each the closed-form cluster id
+    ``floor(ksize(q_mid, delta))`` of its mid-rank ``cum - w/2``
+    (clipped to [1e-12, 1-1e-12]), and collapse each id's run into its
+    weighted mean and total weight. ``ksize`` is monotone, so the ids
+    partition the sorted order and no cluster spans more than one k1
+    unit (``Vector/Internal.hs:106-116``). Points that already sit in
+    distinct clusters come back unchanged, which keeps lossless digests
+    exact.
     """
     n = means.shape[0]
     if n <= 1:
         return means, weights
-    if reverse:
-        means = means[::-1]
-        weights = weights[::-1]
+    # a stable argsort is linear on the sorted runs that builds and
+    # merges hand in; only tied means with weights out of order need
+    # the (much slower) lexsort
+    order = np.argsort(means, kind="stable")
+    means, weights = means[order], weights[order]
+    if ((np.diff(means) == 0) & (np.diff(weights) < 0)).any():
+        order = np.lexsort((weights, means))
+        means, weights = means[order], weights[order]
     cum = np.cumsum(weights)
-    tw = cum[-1]
-    # Fast path: no adjacent pair is mergeable -> digest already compact.
-    # Pair (i, i+1) is mergeable iff k(cum[i+1]/tw) - k(cum[i-1]/tw) <= 1.
-    kb = ksize(np.concatenate(([0.0], cum)) / tw, float(delta))
-    if not np.any(kb[2:] - kb[:-2] <= 1.0):
-        if reverse:
-            return means[::-1].copy(), weights[::-1].copy()
+    q = np.clip((cum - weights / 2.0) / cum[-1], 1e-12, 1.0 - 1e-12)
+    k = np.floor(ksize(q, delta))
+    starts = np.flatnonzero(np.concatenate(([True], k[1:] != k[:-1])))
+    if starts.shape[0] == n:
         return means, weights
-
-    out_m: list[float] = []
-    out_w: list[float] = []
-    i = 0
-    delta_f = float(delta)
-    tw_f = float(tw)
-    while i < n:
-        c0 = float(cum[i - 1]) if i > 0 else 0.0
-        # qlim = ksize_inv(ksize(c0/tw) + 1) INLINED with math.* scalar
-        # ops: the per-cluster numpy scalar calls (asarray/clip/ufunc
-        # dispatch) dominated this loop's profile at ~3x the cost of
-        # the math themselves. Formula kept textually in sync with
-        # ksize/ksize_inv above; test_compress_qlim_matches_scale_fns
-        # pins the equivalence.
-        q0 = c0 / tw_f
-        if q0 < 0.0:
-            q0 = 0.0
-        elif q0 > 1.0:
-            q0 = 1.0
-        kq = delta_f * (math.asin(2.0 * q0 - 1.0) / math.pi + 0.5) + 1.0
-        qlim = 0.5 * (math.sin((kq / delta_f - 0.5) * math.pi) + 1.0)
-        if qlim > 1.0:
-            qlim = 1.0
-        elif qlim < 0.0:
-            qlim = 0.0
-        j = int(np.searchsorted(cum, qlim * tw * (1.0 + 1e-15), side="right")) - 1
-        if j < i:
-            j = i
-        if j == i:
-            # singleton cluster: copy exactly
-            out_m.append(float(means[i]))
-            out_w.append(float(weights[i]))
-        else:
-            mw = weights[i : j + 1]
-            mv = means[i : j + 1]
-            w = float(mw.sum())
-            # pivoted weighted mean for stability (the reference flags its
-            # combinedCentroid as "probably not num. stable",
-            # Tree/Internal.hs:296-305); clamp into the cluster's range
-            pivot = float(mv[0])
-            m = pivot + float(np.dot(mw, mv - pivot)) / w
-            out_m.append(min(max(m, float(mv[0])), float(mv[-1])))
-            out_w.append(w)
-        i = j + 1
-    m = np.asarray(out_m, dtype=np.float64)
-    w = np.asarray(out_w, dtype=np.float64)
-    if reverse:
-        m = m[::-1].copy()
-        w = w[::-1].copy()
-    # Weighted means of consecutive sorted groups are non-decreasing, but
-    # fp roundoff can produce micro-inversions; restore the invariant.
-    if m.shape[0] > 1 and np.any(np.diff(m) < 0):
-        order = np.argsort(m, kind="stable")
-        m = m[order]
-        w = w[order]
-    return m, w
+    w = np.add.reduceat(weights, starts)
+    m = np.add.reduceat(means * weights, starts) / w
+    # clamp into each cluster's own [first, last] range: roundoff can
+    # leave it, and a run of tied means must come back exact
+    return np.clip(m, means[starts], means[np.append(starts[1:], n) - 1]), w
 
 
 @dataclass
@@ -214,7 +168,12 @@ class TDigest:
     vmin: float = math.inf
     vmax: float = -math.inf
     delta: int = 200
-    direction: bool = True
+
+    # Builds and merges cluster at WORK_MULT * delta ("two-level
+    # compression" as in production merging digests), so partials carry
+    # finer clusters into later merges; only `compressed()` enforces
+    # the public delta.
+    WORK_MULT = 2
 
     # ---------------- construction ----------------
 
@@ -226,11 +185,15 @@ class TDigest:
     def from_values(
         cls, values: np.ndarray, delta: int = 200, weights: np.ndarray | None = None
     ) -> "TDigest":
-        """Bulk build (cf. ``Vector/Internal.hs:278-279``): sort once,
-        one compression pass. Drops NaN. Weights default to 1."""
+        """Bulk build (cf. ``Vector/Internal.hs:278-279``): one k1
+        clustering pass at the working delta. Drops NaN. Weights
+        default to 1."""
         v = np.asarray(values, dtype=np.float64).ravel()
         if weights is None:
-            v = v[~np.isnan(v)]
+            # unit weights: tied values are interchangeable, so a plain
+            # sort (far faster than a stable one on unsorted input)
+            # already gives the clustering its (mean, weight) order
+            v = np.sort(v[~np.isnan(v)])
             w = np.ones_like(v)
         else:
             w = np.asarray(weights, dtype=np.float64).ravel()
@@ -238,27 +201,14 @@ class TDigest:
             v, w = v[keep], w[keep]
         if v.size == 0:
             return cls.empty(delta)
-        if weights is None:
-            # unit weights: tied values are fully interchangeable
-            # ((value, 1) tuples are identical), so the faster
-            # introsort gives a byte-identical digest; stability only
-            # matters when distinct weights can ride on tied values
-            order = np.argsort(v)
-        else:
-            order = np.argsort(v, kind="stable")
-        v, w = v[order], w[order]
-        # build at working compression (2x public delta): halves merged
-        # rank error for the same final size; `compressed()` enforces
-        # the public delta once at the end
-        m, w2 = _compress(v, w, cls.WORK_MULT * delta, reverse=False)
+        m, w2 = _k1_clusters(v, w, cls.WORK_MULT * delta)
         return cls(
             means=m,
             weights=w2,
             total_weight=float(w.sum()),
-            vmin=float(v[0]),
-            vmax=float(v[-1]),
+            vmin=float(v.min()),
+            vmax=float(v.max()),
             delta=delta,
-            direction=False,
         )
 
     @classmethod
@@ -276,27 +226,11 @@ class TDigest:
     def is_empty(self) -> bool:
         return self.total_weight <= 0.0
 
-    # Lazy-compression gate: intermediate merges just concat until the
-    # centroid count exceeds LAZY_REL * delta, mirroring the reference's
-    # deferred compression (relMaxSize=25, Tree/Internal.hs:379-384;
-    # buffer > 32*2*delta, Vector/Internal.hs:208-220). Repeatedly
-    # force-compressing at every merge compounds within-cluster loss —
-    # lazy merging keeps tree-reduce error near single-pass.
-    # 50 (up from 20): with ~2*WORK_MULT*delta-sized batch digests the
-    # per-partition chain then almost never compresses mid-stream, and
-    # mid-chain compress passes were the dominant rank-error source in
-    # deep (100+ batch) chains — measured max mid-quantile error drops
-    # 0.0097 -> 0.0041 at delta=200 over 128 batches with no slowdown.
-    LAZY_REL = 50
-    # Intermediate compressions run at WORK_MULT * delta ("two-level
-    # compression" as in production merging digests); only `compressed()`
-    # enforces the public delta.
-    WORK_MULT = 2
-
     def merge(self, other: "TDigest") -> "TDigest":
-        """Associative-within-bound merge: concat, stable mergesort by
-        mean, lazy k1 pass with alternating direction
-        (cf. ``Vector/Internal.hs:176-206``). Deltas must match
+        """Associative-within-bound merge (cf. ``Vector/Internal.hs:176-186``):
+        concat both centroid sets and cluster them under the k1 rule at
+        the working delta, so a partial never grows past O(delta)
+        centroids however many merges it absorbs. Deltas must match
         (runtime check replacing the reference's type-level Nat,
         ``Tree/Internal.hs:36-38``)."""
         if self.is_empty():
@@ -307,13 +241,11 @@ class TDigest:
             raise ValueError(
                 f"cannot merge digests with different delta ({self.delta} vs {other.delta})"
             )
-        m = np.concatenate([self.means, other.means])
-        w = np.concatenate([self.weights, other.weights])
-        order = np.argsort(m, kind="stable")
-        m, w = m[order], w[order]
-        direction = not (self.direction ^ other.direction)
-        if m.shape[0] > self.LAZY_REL * self.delta:
-            m, w = _compress(m, w, self.WORK_MULT * self.delta, reverse=direction)
+        m, w = _k1_clusters(
+            np.concatenate([self.means, other.means]),
+            np.concatenate([self.weights, other.weights]),
+            self.WORK_MULT * self.delta,
+        )
         return TDigest(
             means=m,
             weights=w,
@@ -321,46 +253,15 @@ class TDigest:
             vmin=min(self.vmin, other.vmin),
             vmax=max(self.vmax, other.vmax),
             delta=self.delta,
-            direction=direction,
-        )
-
-    def ship_compressed(self) -> "TDigest":
-        """Compress to the WORKING delta (WORK_MULT * delta) — the form
-        partials take before a shuffle: one cheap pass cuts the wire
-        size ~LAZY_REL/WORK_MULT-fold while measurably *improving*
-        final accuracy vs shipping the lazy concat (fewer, later
-        compressions dominate the chain error). The public delta is
-        enforced only once, by ``compressed()`` at the final stage."""
-        target = self.WORK_MULT * self.delta
-        if self.size <= target:
-            return self
-        m, w = _compress(self.means, self.weights, target, reverse=self.direction)
-        return TDigest(
-            means=m,
-            weights=w,
-            total_weight=self.total_weight,
-            vmin=self.vmin,
-            vmax=self.vmax,
-            delta=self.delta,
-            direction=not self.direction,
         )
 
     def compressed(self) -> "TDigest":
-        """Force-compress to the public delta (the reference's
-        ``finalize``/``forceCompress``, ``Vector/Internal.hs:188-206``).
-        Call once before persisting a digest; queries work either way."""
-        if self.size <= 1:
-            return self
-        m, w = _compress(self.means, self.weights, self.delta, reverse=self.direction)
-        return TDigest(
-            means=m,
-            weights=w,
-            total_weight=self.total_weight,
-            vmin=self.vmin,
-            vmax=self.vmax,
-            delta=self.delta,
-            direction=not self.direction,
-        )
+        """Cluster to the public delta under the k1 rule (the
+        reference's ``finalize``/``forceCompress``,
+        ``Vector/Internal.hs:188-206``). Call once before persisting a
+        digest; queries work either way."""
+        m, w = _k1_clusters(self.means, self.weights, self.delta)
+        return dataclasses.replace(self, means=m, weights=w)
 
     def compressed_k0(self) -> "TDigest":
         """Compress under the k0 WEIGHT-CAP criterion
@@ -370,31 +271,21 @@ class TDigest:
         (clusters of mean-sorted runs, each within its weight cap);
         the engine's hot paths use the k1 ``ksize`` criterion, which
         bounds cluster *q-widths* directly."""
-        if self.size <= 1:
-            return self
         m, w = _compress_k0(self.means, self.weights, self.delta)
-        return TDigest(
-            means=m,
-            weights=w,
-            total_weight=self.total_weight,
-            vmin=self.vmin,
-            vmax=self.vmax,
-            delta=self.delta,
-            direction=not self.direction,
-        )
+        return dataclasses.replace(self, means=m, weights=w)
 
     def add_values(self, values: np.ndarray) -> "TDigest":
-        """Buffered insert of a batch (the UDAF update step)."""
+        """Batch insert (the UDAF update step): build, then merge."""
         return self.merge(TDigest.from_values(values, self.delta))
 
     def insert(self, x: float) -> "TDigest":
         """Single-value insert — API parity with the reference's
-        ``insert``/``insert'`` (``Tree/Internal.hs:452-468``), with the
-        same deferred-compression behavior (the lazy gate in ``merge``
-        batches compaction). Returns a new digest; the hot paths use
-        the vectorized ``add_values``/``from_values`` instead — one
-        Python-level insert per row is exactly what the Arrow batching
-        exists to avoid."""
+        ``insert``/``insert'`` (``Tree/Internal.hs:452-468``): a
+        one-point merge, clustered at the working delta like every
+        merge. Returns a new digest; the hot paths use the vectorized
+        ``add_values``/``from_values`` instead — one Python-level
+        insert per row is exactly what the Arrow batching exists to
+        avoid."""
         return self.add_values(np.asarray([x], dtype=np.float64))
 
     @staticmethod
@@ -692,8 +583,13 @@ class TDigest:
         import struct as _struct
 
         hsize = _struct.calcsize("<4sIqddd")
-        magic, delta, n, tw, vmin, vmax = _struct.unpack("<4sIqddd", b[:hsize])
-        assert magic == b"TDG1", "bad TDigest blob"
+        # blobs come back from disk and other processes: check them
+        # with real exceptions, which `python -O` keeps
+        if len(b) < hsize or b[:4] != b"TDG1":
+            raise ValueError("not a TDigest blob (bad magic)")
+        _, delta, n, tw, vmin, vmax = _struct.unpack("<4sIqddd", b[:hsize])
+        if len(b) != hsize + 16 * n:
+            raise ValueError(f"TDigest blob of {len(b)} bytes holds not {n} centroids")
         if n == 0 or tw == 0.0:
             return cls.empty(delta)
         means = np.frombuffer(b[hsize : hsize + 8 * n], dtype=np.float64).copy()

@@ -376,35 +376,79 @@ def test_insert_single_value_parity():
         assert abs(seq.quantile(q) - bulk.quantile(q)) < 1e-12
 
 
-def test_compress_qlim_matches_scale_fns():
-    """_compress inlines qlim = ksize_inv(ksize(q0) + 1) with scalar
-    math.* ops for speed; this pins the inlined formula to the public
-    scale functions so they cannot drift apart."""
-    import math
-
-    from tdigest_spark.sketch.tdigest import ksize, ksize_inv
-
-    rng = np.random.default_rng(1)
-    for delta in (20, 200, 400, 1000):
-        for q0 in np.concatenate(
-            (rng.uniform(0, 1, 200), [0.0, 1.0, 1e-12, 1 - 1e-12])
-        ):
-            want = float(ksize_inv(ksize(float(q0), float(delta)) + 1.0, float(delta)))
-            kq = delta * (math.asin(2.0 * q0 - 1.0) / math.pi + 0.5) + 1.0
-            got = 0.5 * (math.sin((kq / delta - 0.5) * math.pi) + 1.0)
-            got = min(max(got, 0.0), 1.0)
-            assert abs(got - want) < 1e-15
-
-
 def test_unweighted_build_sort_kind_is_immaterial():
-    """Heavily tied unweighted input: introsort vs stable sort give a
-    byte-identical digest ((value, 1) tuples are interchangeable)."""
+    """Heavily tied unweighted input: the build's plain sort and the
+    clustering's (mean, weight) lexsort give a byte-identical digest
+    ((value, 1) tuples are interchangeable)."""
     rng = np.random.default_rng(9)
     v = rng.integers(0, 50, 20_000).astype(np.float64)  # ~400 ties per value
     d = TDigest.from_values(v, 100)
-    order = np.argsort(v, kind="stable")
-    vs = v[order]
-    from tdigest_spark.sketch.tdigest import _compress
+    from tdigest_spark.sketch.tdigest import _k1_clusters
 
-    m, w = _compress(vs, np.ones_like(vs), TDigest.WORK_MULT * 100, reverse=False)
+    m, w = _k1_clusters(v, np.ones_like(v), TDigest.WORK_MULT * 100)
     assert np.array_equal(d.means, m) and np.array_equal(d.weights, w)
+
+
+# ---------------- the k1 bound under repeated merges ----------------
+
+EXP_PROBES = (0.5, 0.99, 0.999, 0.9999)
+
+
+def _exp_partials(n_parts, per_part, seed, delta=200):
+    """exponential(ln 2) values (the paper's workload) split into
+    ``n_parts`` digests, each compressed to the public delta as a
+    persisted digest would be."""
+    v = np.random.default_rng(seed).exponential(1 / math.log(2), n_parts * per_part)
+    parts = [
+        TDigest.from_values(c, delta).compressed() for c in np.split(v, n_parts)
+    ]
+    return np.sort(v), parts
+
+
+def _assert_within_k1_width(d, sv, delta):
+    """Every probe's true rank lies within one k1 unit of q: a cluster
+    may span pi*sqrt(q(1-q))/delta of rank under k1."""
+    for q in EXP_PROBES:
+        est = d.quantile(q)
+        lo = np.searchsorted(sv, est, side="left") / len(sv)
+        hi = np.searchsorted(sv, est, side="right") / len(sv)
+        err = 0.0 if lo <= q <= hi else min(abs(q - lo), abs(q - hi))
+        assert err <= math.pi * math.sqrt(q * (1 - q)) / delta, (q, err)
+
+
+def test_merge_all_of_512_partials_within_k1_width():
+    sv, parts = _exp_partials(512, 2000, seed=3)
+    d = TDigest.merge_all(parts).compressed()
+    _assert_within_k1_width(d, sv, 200)
+    assert d.total_weight == len(sv)
+    assert d.size <= 201
+
+
+def test_512_step_merge_chain_within_k1_width():
+    sv, parts = _exp_partials(512, 2000, seed=4)
+    acc = TDigest.empty(200)
+    for p in parts:
+        acc = acc.merge(p).compressed()
+    _assert_within_k1_width(acc, sv, 200)
+    assert acc.size <= 201
+
+
+@pytest.mark.parametrize("n_parts,per_part", [(2, 20_000), (512, 2000)])
+def test_merged_compressed_mean_is_preserved(n_parts, per_part):
+    sv, parts = _exp_partials(n_parts, per_part, seed=5)
+    d = TDigest.merge_all(parts).compressed()
+    assert d.mean() == pytest.approx(sv.mean(), rel=1e-12)
+
+
+def test_from_bytes_rejects_truncated_and_mistagged_blobs():
+    d = TDigest.from_values(np.random.default_rng(6).normal(size=1000), 50)
+    blob = d.to_bytes()
+    assert TDigest.from_bytes(blob).means.tolist() == d.means.tolist()
+    with pytest.raises(ValueError):
+        TDigest.from_bytes(blob[:-40])
+    with pytest.raises(ValueError):
+        TDigest.from_bytes(blob + b"\0" * 16)
+    with pytest.raises(ValueError):
+        TDigest.from_bytes(b"XXXX" + blob[4:])
+    with pytest.raises(ValueError):
+        TDigest.from_bytes(blob[:10])

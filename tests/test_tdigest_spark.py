@@ -949,3 +949,76 @@ def test_quantile_normalize_null_handling(spark):
     got = {(r.g, r.value): r.normalized for r in out}
     assert got[("a", None)] is None and got[("b", 5.0)] is None
     assert got[("a", 1.0)] is not None and got[("a", 2.0)] is not None
+
+
+def test_kernel_clusters_match_jvm_merge(spark):
+    """The numpy kernel and the grouped JVM merge apply one k1 rule:
+    on uncompressed digests (ties and mixed weights included) the
+    kernel's clusters equal a one-row group's ``tdigest_merge_agg``
+    output, up to summation order."""
+    import math
+
+    from pyspark.sql import types as T
+
+    from tdigest_spark.operators.digest_agg import DIGEST_TYPE, tdigest_merge_agg
+    from tdigest_spark.sketch.tdigest import TDigest, _k1_clusters
+
+    rng = np.random.default_rng(12)
+    n = 3000
+    ties = rng.integers(0, 40, n).astype(np.float64)
+    digests = [
+        TDigest.from_values(rng.exponential(1 / math.log(2), n), LOSSLESS),
+        TDigest.from_values(ties, LOSSLESS),
+        TDigest.from_values(ties, LOSSLESS, weights=rng.integers(1, 6, n).astype(np.float64)),
+        TDigest.from_values(rng.normal(size=n), LOSSLESS, weights=rng.uniform(0.1, 3.0, n)),
+    ]
+    delta = 50
+    rows = [
+        (g, {**d.to_row(), "means": d.means.tolist(), "weights": d.weights.tolist()})
+        for g, d in enumerate(digests)
+    ]
+    schema = T.StructType(
+        [T.StructField("g", T.LongType()), T.StructField("digest", DIGEST_TYPE)]
+    )
+    out = tdigest_merge_agg(spark.createDataFrame(rows, schema), by=["g"], delta=delta)
+    got = {r["g"]: r["digest"] for r in out.collect()}
+    for g, d in enumerate(digests):
+        assert d.size == n
+        m, w = _k1_clusters(d.means, d.weights, delta)
+        # the JVM rebuild sort_array()s its (mean, weight) structs, so
+        # clusters sharing a tied mean come back ordered by weight
+        order = np.lexsort((w, m))
+        m, w = m[order], w[order]
+        assert len(got[g]["means"]) == len(m)
+        np.testing.assert_allclose(got[g]["means"], m, rtol=1e-12, atol=1e-12)
+        np.testing.assert_allclose(got[g]["weights"], w, rtol=1e-12)
+
+
+def test_keyless_merge_commits_stay_within_k1_width(spark):
+    """The keyless ``digest_sink`` pattern: 8 commits, each a keyless
+    ``tdigest_merge_agg`` of the old digest and the new batch's, on
+    exponential(ln 2) data. Every probe stays within the k1 width
+    pi*sqrt(q(1-q))/delta of its true rank, and the mean is kept."""
+    import math
+
+    import pandas as pd
+
+    from tdigest_spark.operators.digest_agg import tdigest_merge_agg
+    from tdigest_spark.sketch.tdigest import TDigest
+
+    rng = np.random.default_rng(13)
+    batches = [rng.exponential(1 / math.log(2), 20_000) for _ in range(8)]
+    old = None
+    for b in batches:
+        new = tdigest_agg(
+            spark.createDataFrame(pd.DataFrame({"v": b})).repartition(4), "v", delta=200
+        )
+        merged = new if old is None else tdigest_merge_agg(old.unionByName(new))
+        old = merged.localCheckpoint()
+    d = TDigest.from_row(old.collect()[0]["digest"])
+    vals = np.sort(np.concatenate(batches))
+    assert d.total_weight == len(vals)
+    for q in (0.5, 0.99, 0.999, 0.9999):
+        err = _rank_err(vals, d.quantile(q), q)
+        assert err <= math.pi * math.sqrt(q * (1 - q)) / 200, (q, err)
+    assert d.mean() == pytest.approx(vals.mean(), rel=1e-12)
